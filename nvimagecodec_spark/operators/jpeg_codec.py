@@ -253,7 +253,9 @@ class _BitReader:
     entropy segment — the reader pads with zero bits and leaves ``pos``
     pointing at the marker's 0xFF so the caller can resume the marker
     walk there. Baseline keeps the strict behavior (only EOI pads;
-    anything else is stream corruption)."""
+    anything else is stream corruption). The pad only feeds look-ahead:
+    a decode that CONSUMES a pad bit ran out of entropy data before its
+    last MCU (a truncated scan) and raises instead of zero-filling."""
 
     def __init__(
         self,
@@ -266,6 +268,7 @@ class _BitReader:
         self.pos = pos
         self.acc = 0
         self.nbits = 0
+        self.pad = 0  # trailing zero bits of acc that are not stream data
         self.stop_at_markers = stop_at_markers
         self.allow_restarts = allow_restarts
 
@@ -295,9 +298,9 @@ class _BitReader:
                     # leave pos at the 0xFF — restart() (or the caller's
                     # marker walk) consumes the marker itself
                     self.pos -= 1
-                    byte = 0
-                    self.acc = (self.acc << 8) | byte
+                    self.acc <<= 8
                     self.nbits += 8
+                    self.pad += 8
                     continue
                 else:
                     raise ValueError(f"unexpected marker FF{marker:02X} in scan")
@@ -309,6 +312,7 @@ class _BitReader:
         sequence number, resume byte-aligned after it (§E.2.4)."""
         self.acc = 0
         self.nbits = 0
+        self.pad = 0
         if self.pos + 2 > len(self.b) or self.b[self.pos] != 0xFF:
             raise ValueError("expected restart marker")
         m = self.b[self.pos + 1]
@@ -322,6 +326,8 @@ class _BitReader:
         if self.nbits < n:
             self._fill()
         self.nbits -= n
+        if self.nbits < self.pad:
+            raise ValueError("entropy data ended before the scan's last MCU")
         v = (self.acc >> self.nbits) & ((1 << n) - 1)
         # drop consumed high bits — keeps the accumulator word-sized so a
         # multi-MB scan decodes in O(n), not O(n^2) big-int work
@@ -1137,6 +1143,10 @@ def decode_jpeg_distributed(spark, b: bytes, min_segments: int = 2) -> np.ndarra
     vmax = max(f[1] for f in factors)
     nmx = -(-w // (8 * hmax))
     nmy = -(-h // (8 * vmax))
+    if plan[-1][4] < nmx * nmy:
+        # the stream ends before its last restart segments: decoding what
+        # is there would leave the missing MCUs zero-filled
+        raise ValueError("entropy data ended before the scan's last MCU")
 
     seg_schema = _T.StructType([
         _T.StructField("k", _T.IntegerType()),
@@ -1156,9 +1166,14 @@ def decode_jpeg_distributed(spark, b: bytes, min_segments: int = 2) -> np.ndarra
         for pdf in batches:
             rows = []
             for r in pdf.itertuples():
-                parts = _decode_segment(
-                    bytes(r.header), bytes(r.seg), int(r.lo), int(r.hi)
-                )
+                try:
+                    parts = _decode_segment(
+                        bytes(r.header), bytes(r.seg), int(r.lo), int(r.hi)
+                    )
+                except ValueError as e:
+                    # comp -1 carries the error message back to the caller
+                    rows.append((int(r.k), -1, str(e).encode(), b""))
+                    continue
                 for c, (ia, ca) in enumerate(parts):
                     rows.append((int(r.k), c, ia.tobytes(), ca.tobytes()))
             yield pd.DataFrame(rows, columns=["k", "comp", "idxs", "coefs"])
@@ -1171,6 +1186,8 @@ def decode_jpeg_distributed(spark, b: bytes, min_segments: int = 2) -> np.ndarra
         for (hc, vc) in factors
     ]
     for row in collected:
+        if row["comp"] < 0:
+            raise ValueError(f"segment {row['k']}: {row['idxs'].decode()}")
         ia = np.frombuffer(row["idxs"], dtype=np.int64)
         ca = np.frombuffer(row["coefs"], dtype=np.int16).reshape(-1, 64)
         qcoef[row["comp"]][ia] = ca.astype(np.int64)

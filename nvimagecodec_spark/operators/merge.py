@@ -94,7 +94,9 @@ def payload_struct_expr(table: LakeTable, raw_col: str) -> F.Column:
     return F.from_json(F.col(raw_col), T.StructType(fields))
 
 
-def payload_extract_exprs(table: LakeTable, struct_col: str = _PX_COL) -> list[F.Column]:
+def payload_extract_exprs(
+    table: LakeTable, struct_col: str = _PX_COL, keep_typed: F.Column | None = None
+) -> list[F.Column]:
     """Typed per-column extraction from the materialized payload struct.
     A renamed column is read under both its current and historical names
     and coalesced, so pre-rename events still apply; columns added by
@@ -109,8 +111,36 @@ def payload_extract_exprs(table: LakeTable, struct_col: str = _PX_COL) -> list[F
             continue
         variants = [c.name] + [p for p in c.prev_names if p != c.name]
         e = F.coalesce(*[j[v] for v in variants]) if len(variants) > 1 else j[variants[0]]
+        if keep_typed is not None:  # these rows keep their current typed value
+            e = F.when(keep_typed, F.col(c.name)).otherwise(e)
         exprs.append(e.alias(c.name))
     return exprs
+
+
+def stored_image_expr(table: LakeTable) -> F.Column:
+    """``after`` as ``_sys_raw`` stores it: NULL when the typed columns
+    rebuild the whole image, i.e. it is a JSON object whose every key is a
+    key column or a live column's current or previous name, and whose
+    every non-null field parsed to a non-null typed value. Anything else
+    (a field ahead of its add/rename event, a type mismatch or overflow,
+    malformed JSON) keeps ``after`` verbatim for a later re-extraction.
+    Costs one extra ``from_json`` to a string map, over winning rows only;
+    reads the typed values from the materialized ``_PX_COL`` struct."""
+    j = F.col(_PX_COL)
+    typed_ok: dict[str, F.Column] = {k: F.lit(True) for k in table.key_cols}
+    for c in table.table_schema.live_columns:
+        if c.name not in table.key_cols:
+            for v in [c.name] + c.prev_names:
+                typed_ok.setdefault(v, j[v].isNotNull())
+    ok = F.create_map(*[x for k, v in typed_ok.items() for x in (F.lit(k), v)])
+    fields = F.from_json(F.col("after"), T.MapType(T.StringType(), T.StringType()))
+
+    def field_kept(e: F.Column) -> F.Column:
+        hit = F.element_at(ok, e["key"])
+        return hit.isNotNull() & (e["value"].isNull() | hit)
+
+    lossless = F.forall(F.map_entries(fields), field_kept)
+    return F.when(lossless, F.lit(None).cast("string")).otherwise(F.col("after"))
 
 
 def _batch_to_rows(table: LakeTable, deduped: DataFrame) -> DataFrame:
@@ -125,7 +155,7 @@ def _batch_to_rows(table: LakeTable, deduped: DataFrame) -> DataFrame:
     for src, dst in _SYS_MAP.items():
         exprs.append(F.col(src).alias(dst))
     exprs.append((F.col("op") == "D").alias("_sys_deleted"))
-    exprs.append(F.col("after").alias("_sys_raw"))
+    exprs.append(stored_image_expr(table).alias("_sys_raw"))
     return staged.select(*exprs)
 
 

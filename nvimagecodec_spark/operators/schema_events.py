@@ -95,11 +95,14 @@ def reextract_payloads(table: LakeTable) -> None:
 
     With bounded delivery disorder, events carrying a new/renamed field can
     be applied in an epoch BEFORE the schema event announcing the field —
-    extraction under the then-current schema dropped those values. Every
+    extraction under the then-current schema dropped those values. Such a
     row keeps its winning raw after-image (``_sys_raw``), so applying the
-    new schema is a re-extraction over the table: all payload columns are
-    recomputed from the raw image under the evolved schema; keys, order
-    keys and tombstones pass through untouched.
+    new schema is a re-extraction over the table: its payload columns are
+    recomputed from the raw image under the evolved schema. A row whose
+    ``_sys_raw`` is NULL had an image its typed columns hold whole (see
+    ``merge.stored_image_expr``) and keeps its typed values; keys, order
+    keys and tombstones pass through untouched. Dropped values come back
+    through the image ``LakeTable.read`` rebuilds for such rows.
 
     Cost: one copy-on-write rewrite of the table per add/rename event.
     Schema events are rare (a handful over a table's lifetime), and this is
@@ -120,7 +123,7 @@ def reextract_payloads(table: LakeTable) -> None:
         _PX_COL, payload_struct_expr(table, "_sys_raw")
     )
     exprs = [F2.col(k) for k in table.key_cols]
-    exprs += payload_extract_exprs(table)
+    exprs += payload_extract_exprs(table, keep_typed=F2.col("_sys_raw").isNull())
     exprs += [F2.col(c) for c in SYSTEM_COLS]
     exprs.append(F2.col(BUCKET_COL))
     table.overwrite(current.select(*exprs))

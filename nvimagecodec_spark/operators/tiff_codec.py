@@ -257,14 +257,14 @@ def encode_tiff(
 
     # layout: 8-byte header | IFD | long-value area | strip data
     entries: list[tuple[int, int, int, object]] = [
-        (256, 3, 1, w),                       # ImageWidth  SHORT
-        (257, 3, 1, h),                       # ImageLength SHORT
+        (256, 4, 1, w),                       # ImageWidth  LONG (> 65535 ok)
+        (257, 4, 1, h),                       # ImageLength LONG
         (258, 3, ch, [8] * ch),               # BitsPerSample
         (259, 3, 1, _COMP_TAG[compression]),  # Compression
         (262, 3, 1, photometric),             # PhotometricInterpretation
         (273, 4, n_strips, None),             # StripOffsets (patched below)
         (277, 3, 1, ch),                      # SamplesPerPixel
-        (278, 3, 1, rows_per_strip),          # RowsPerStrip
+        (278, 4, 1, rows_per_strip),          # RowsPerStrip LONG
         (279, 4, n_strips, [len(s) for s in strips]),  # StripByteCounts
     ]
     if ch == 4:
@@ -510,14 +510,23 @@ def decode_tiffs(
             ids, codecs, ws, hs, cs, sums, wsums, c0s = [], [], [], [], [], [], [], []
             for did, bb in zip(pdf[id_col], pdf[binary_col]):
                 b = bytes(bb)
-                comp = _TAG_COMP[_read_ifd(b)[0].get(259, [1])[0]]
-                arr = decode_tiff(b)
+                ids.append(int(did))
+                try:
+                    # decode first: it rejects an unknown compression tag
+                    # with ValueError before the name lookup below
+                    arr = decode_tiff(b)
+                    comp = _TAG_COMP[_read_ifd(b)[0].get(259, [1])[0]]
+                except (ValueError, struct.error, IndexError):
+                    # dead-letter row (decode_jpegs' contract): a malformed
+                    # payload must not fail the whole task
+                    for col in (codecs, ws, hs, cs, sums, wsums, c0s):
+                        col.append(None)
+                    continue
                 h, w, ch = arr.shape
                 a = arr.astype(np.int64)
                 x = np.arange(w, dtype=np.int64)[None, :, None]
                 y = np.arange(h, dtype=np.int64)[:, None, None]
                 c = np.arange(ch, dtype=np.int64)[None, None, :]
-                ids.append(int(did))
                 codecs.append(f"tiff-{comp}")
                 ws.append(w)
                 hs.append(h)
@@ -529,12 +538,12 @@ def decode_tiffs(
                 {
                     "doc_id": pd.Series(ids, dtype="int64"),
                     "codec": pd.Series(codecs, dtype="object"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "channels": pd.Series(cs, dtype="int32"),
-                    "px_sum": pd.Series(sums, dtype="int64"),
-                    "px_wsum": pd.Series(wsums, dtype="int64"),
-                    "c0_sum": pd.Series(c0s, dtype="int64"),
+                    "width": pd.Series(ws, dtype="Int32"),
+                    "height": pd.Series(hs, dtype="Int32"),
+                    "channels": pd.Series(cs, dtype="Int32"),
+                    "px_sum": pd.Series(sums, dtype="Int64"),
+                    "px_wsum": pd.Series(wsums, dtype="Int64"),
+                    "c0_sum": pd.Series(c0s, dtype="Int64"),
                 }
             )
 

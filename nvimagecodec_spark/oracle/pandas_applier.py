@@ -47,8 +47,9 @@ def apply_events_pandas(events: pd.DataFrame) -> pd.DataFrame:
                             v[new] = v.pop(old)
             elif sc["kind"] == "drop":
                 # stop surfacing the column; stored payload values stay in
-                # state because the ENGINE keeps each row's winning raw
-                # image (_sys_raw) and re-extracts it on a later re-add —
+                # state because the ENGINE keeps each row's winning image
+                # (_sys_raw, stored or rebuilt from the typed columns) and
+                # re-extracts it on a later re-add —
                 # a drop→re-add resurfaces the winning write's value in
                 # both implementations
                 if sc["column"] in columns:

@@ -38,6 +38,7 @@ from nvimagecodec_spark.lakehouse.table import (
 from nvimagecodec_spark.operators.lww import lww_dedupe
 from nvimagecodec_spark.operators.merge import MergeResult, merge_into, merge_into_delta
 from nvimagecodec_spark.operators.schema_events import (
+    SchemaApplyResult,
     apply_schema_events,
     reextract_payloads,
     split_schema_events,
@@ -108,7 +109,8 @@ class CdcEngine:
     def _epoch_stats(self, events: DataFrame) -> dict:
         """ONE fused job over the epoch's events yielding BOTH the per-file
         lineage stats (G8) and the hot-key summary (G1), with the per-file
-        detail capped SERVER-SIDE at ``MAX_PARTITION_LINEAGE``.
+        detail capped SERVER-SIDE at ``MAX_PARTITION_LINEAGE``, plus the
+        epoch's S-event count (no S-events → no schema-event job).
 
         Round-3 verdict #1: these were two separate driver round-trips, and
         the lineage one collected one row per source file UNCAPPED — at
@@ -148,12 +150,14 @@ class CdcEngine:
             "turn_idx",
             ok.alias("_ok"),
             (ok & (F.col("op") != F.lit("S"))).alias("_is_data"),
+            (ok & (F.col("op") == F.lit("S"))).alias("_is_schema"),
         ).persist(StorageLevel.MEMORY_AND_DISK)
         _N = lambda: F.lit(None).cast("long")  # noqa: E731 — union pad
         try:
             file_agg = flagged.groupBy("src_file").agg(
                 F.sum(F.when(F.col("_ok"), 1).otherwise(0)).alias("rows"),
                 F.sum(F.when(~F.col("_ok"), 1).otherwise(0)).alias("dead"),
+                F.sum(F.when(F.col("_is_schema"), 1).otherwise(0)).alias("schema"),
                 F.min("src_offset").alias("min_offset"),
                 F.max("src_offset").alias("max_offset"),
                 F.min("lsn").alias("min_lsn"),
@@ -178,15 +182,18 @@ class CdcEngine:
                     _N().alias("max_n"),
                     _N().alias("total"),
                     _N().alias("keys"),
+                    _N().alias("schema"),
                 )
             )
             # exact totals survive the cap: a single-row file summary and a
             # single-row key summary, cross-joined (1×1) and unioned under
             # the detail so ONE collect carries everything. Column pruning
             # keeps each branch's partial agg minimal (no shared exchange —
-            # deliberate: the summary branch aggregates 2 columns, not 8).
+            # deliberate: the summary branch aggregates 3 columns, not 9).
             fsumm = file_agg.agg(
-                F.count(F.lit(1)).alias("n_files"), F.sum("dead").alias("dead")
+                F.count(F.lit(1)).alias("n_files"),
+                F.sum("dead").alias("dead"),
+                F.sum("schema").alias("schema"),
             )
             ksumm = (
                 flagged.where(F.col("_is_data"))
@@ -211,13 +218,14 @@ class CdcEngine:
                 F.col("max_n"),
                 F.col("total"),
                 F.col("keys"),
+                F.col("schema"),
             )
             rows = detail.unionByName(summ).collect()
         finally:
             flagged.unpersist()
 
         partitions = []
-        n_files = n_dead = n_events = max_n = distinct_keys = 0
+        n_files = n_dead = n_events = max_n = distinct_keys = n_schema = 0
         for r in rows:
             if r["_row"] == "file":
                 partitions.append(
@@ -236,6 +244,7 @@ class CdcEngine:
                 max_n = int(r["max_n"] or 0)
                 n_events = int(r["total"] or 0)
                 distinct_keys = int(r["keys"] or 0)
+                n_schema = int(r["schema"] or 0)
         truncated = n_files > cap
         if not truncated:
             # full set present — keep the historical by-name ordering
@@ -248,6 +257,7 @@ class CdcEngine:
             "n_events": n_events,
             "max_key_events": max_n,
             "distinct_keys": distinct_keys,
+            "n_schema_events": n_schema,
         }
 
     # ------------------------------------------------------------- epoch core
@@ -368,7 +378,13 @@ class CdcEngine:
             )
 
         data, schema_ev = split_schema_events(claimed)
-        schema_res = apply_schema_events(self.table, schema_ev)
+        # the fused stats job counted the S-events: an epoch without any
+        # skips the schema job's re-scan + re-parse of the whole epoch
+        schema_res = (
+            apply_schema_events(self.table, schema_ev)
+            if stats["n_schema_events"]
+            else SchemaApplyResult(applied=[], rejected=[])
+        )
         if schema_res.needs_backfill:
             # recover out-of-order-delivered fields from stored raw images
             reextract_payloads(self.table)

@@ -566,3 +566,20 @@ def test_distributed_decode_falls_back_without_restarts(spark):
     rng = np.random.default_rng(11)
     b = J.encode_jpeg(rng.integers(0, 256, (32, 40), dtype=np.uint8))
     assert (J.decode_jpeg_distributed(spark, b) == J.decode_jpeg(b)).all()
+
+
+def test_truncated_restart_stream_raises_in_both_paths(spark):
+    """A DRI stream cut short must dead-letter (ValueError), not decode
+    the missing MCUs as zero-filled blocks: cut at a restart boundary
+    (whole trailing segments gone) and inside the last segment."""
+    rng = np.random.default_rng(12)
+    b = J.encode_jpeg(rng.integers(0, 256, (64, 64), dtype=np.uint8), restart_interval=2)
+    last_rst = max(i for i in range(len(b) - 1) if b[i] == 0xFF and 0xD0 <= b[i + 1] <= 0xD7)
+    at_boundary = b[:last_rst] + b"\xff\xd9"
+    mid_segment = b[: len(b) - 12] + b"\xff\xd9"
+    for cut in (at_boundary, mid_segment):
+        with pytest.raises(ValueError):
+            J.decode_jpeg(cut)
+        with pytest.raises(ValueError):
+            J.decode_jpeg_distributed(spark, cut)
+    assert (J.decode_jpeg_distributed(spark, b) == J.decode_jpeg(b)).all()

@@ -213,3 +213,41 @@ def test_spark_attach_decode_matches_recompute(spark):
         assert r["c0_sum"] == int(a[:, :, 0].sum())
         comps.add(comp)
     assert comps == set(TIFF_COMPRESSIONS)  # fixture really cycles all four
+
+
+def test_encode_dimensions_above_short_range():
+    """ImageWidth/ImageLength/RowsPerStrip are written as LONG, so a
+    dimension past 65535 encodes (SHORT would overflow in struct.pack)."""
+    arr = (np.arange(70_000) % 251).astype(np.uint8).reshape(1, 70_000)
+    b = encode_tiff(arr, compression="deflate", rows_per_strip=70_000)
+    tags = _read_ifd(b)[0]
+    assert (tags[256], tags[257], tags[278]) == ([70_000], [1], [70_000])
+    back = decode_tiff(b)
+    assert back.shape == (1, 70_000, 1) and (back[:, :, 0] == arr).all()
+
+
+def _with_compression_tag(b: bytes, value: int) -> bytes:
+    """Little-endian TIFF with its Compression (259) value overwritten."""
+    out = bytearray(b)
+    ifd = int.from_bytes(out[4:8], "little")
+    for i in range(int.from_bytes(out[ifd : ifd + 2], "little")):
+        e = ifd + 2 + 12 * i
+        if int.from_bytes(out[e : e + 2], "little") == 259:
+            out[e + 8 : e + 10] = value.to_bytes(2, "little")
+    return bytes(out)
+
+
+def test_spark_decode_dead_letters_bad_rows(spark):
+    """A malformed payload or an unknown compression tag yields a NULL
+    stats row for that document; the rest of the batch decodes."""
+    good = encode_tiff(np.full((4, 5), 9, dtype=np.uint8), compression="none")
+    unknown = _with_compression_tag(good, 7)  # 7 = JPEG: not supported
+    with pytest.raises(ValueError):
+        decode_tiff(unknown)
+    df = spark.createDataFrame(
+        [(1, good), (2, b"II*\x00garbage"), (3, unknown)], "doc_id long, image binary"
+    )
+    out = {r["doc_id"]: r for r in decode_tiffs(df).collect()}
+    assert (out[1]["codec"], out[1]["width"], out[1]["px_sum"]) == ("tiff-none", 5, 180)
+    for did in (2, 3):
+        assert out[did]["codec"] is None and out[did]["px_sum"] is None
