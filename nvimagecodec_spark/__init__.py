@@ -11,7 +11,7 @@ pipeline; see SURVEY.md) re-expressed as an idiomatic Spark CDC pipeline:
   transactional table format (``lakehouse``) with atomic snapshot
   commits, commit tags (exactly-once replays are no-ops), schema
   evolution (add/rename/widen/drop) and time travel
-- skew salting, adaptive per-epoch rate control, per-partition lineage
+- hot-epoch detection, adaptive per-epoch rate control, per-partition lineage
 
 Reference analogs are cited per-module (file:line into /root/reference).
 """

@@ -7,7 +7,7 @@ director before any work is scheduled.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass
@@ -16,17 +16,13 @@ class EngineConfig:
 
     Attributes
     ----------
-    bucket_count:
-        Number of hash buckets the target table is partitioned into on
-        the primary key. At 100 TB scale this is the unit of
-        copy-on-write: a merge only rewrites buckets its batch touches.
     hot_key_threshold:
-        Per-epoch event count above which a key is considered "hot" and
-        salted before the dedupe shuffle (reference analog: cost-descending
-        ``sortSamples`` straggler defusal,
+        Per-epoch event count above which a key is considered "hot". The
+        epoch is flagged ``hot_epoch`` in lineage (detection for
+        monitoring only): the LWW dedupe is a map-side-combinable
+        ``max(struct)`` that a hot key cannot skew (reference analog:
+        cost-descending ``sortSamples`` straggler defusal,
         /root/reference/src/image_generic_decoder.cpp:100-148).
-    salt_buckets:
-        Number of salt partitions for hot keys (phase-1 partial LWW).
     broadcast_threshold_rows:
         If a deduped batch is below this size, the merge uses the
         broadcast-join path instead of the sort-merge path (reference
@@ -39,30 +35,10 @@ class EngineConfig:
         /root/reference/src/image_generic_codec.h:1064-1123).
     target_epoch_seconds:
         The controller's setpoint for epoch wall time.
-    shuffle_partitions:
-        Shuffle parallelism used inside epochs; sized so a partition of
-        the dedupe shuffle fits in executor memory at the target SF.
     """
 
-    bucket_count: int = 16
     hot_key_threshold: int = 10_000
-    salt_buckets: int = 16
-    # Salting is exact but adds a shuffle stage; the default LWW agg is
-    # map-side combinable and therefore already skew-immune (measured:
-    # plain 1.2s vs salted 3.6s on a 50%-hot 10M-event epoch). Enable only
-    # when plugging a non-combinable dedupe formulation into the epoch.
-    salt_non_combinable: bool = False
     broadcast_threshold_rows: int = 100_000
-    # Cross-strategy split for bimodal epochs (G4 analog): light buckets
-    # (batch slice <= light_bucket_max_rows) apply via broadcast — their
-    # table data never shuffles — while heavy buckets take sort-merge;
-    # one atomic commit. Measured ~5% at 3M rows, grows with SF; off by
-    # default (unimodal epochs want one strategy). "auto" hands the
-    # threshold to AdaptiveSplitController: a feedback loop on observed
-    # apply throughput with a periodic plain-sort-merge probe epoch
-    # (reference adjustBatchSizes; light_bucket_max_rows seeds it).
-    split_light_buckets: bool | str = False
-    light_bucket_max_rows: int = 1_000
     # Snapshot retention: every snapshot entry carries the table's full
     # live-file manifest, so an unbounded epoch stream grows the metadata
     # json without bound. The engine expires old snapshots every
@@ -74,7 +50,6 @@ class EngineConfig:
     target_epoch_seconds: float = 30.0
     min_batch_events: int = 10_000
     max_batch_events: int = 50_000_000
-    shuffle_partitions: int = 32
     dead_letter_dir: str | None = None
     # CHECK constraints enforced at the apply gate: name -> SQL boolean
     # over the table's logical columns, ANSI semantics (NULL passes;
@@ -119,13 +94,11 @@ class EngineConfig:
     optimize_every_epochs: int = 0
     optimize_max_files_per_bucket: int = 4
     optimize_orphan_grace_seconds: int = 72 * 3600
-    extra: dict = field(default_factory=dict)
 
     def __post_init__(self):
-        # tri-state knobs take bool or ONE exact string; any other string
+        # a tri-state knob takes bool or ONE exact string; any other string
         # is truthy in Python, so a typo ('Auto', 'true') would silently
         # enable the wrong mode instead of the one asked for
-        for knob in ("split_light_buckets", "mor_deltas"):
-            v = getattr(self, knob)
-            if not (isinstance(v, bool) or v == "auto"):
-                raise ValueError(f"{knob} must be True, False or 'auto'; got {v!r}")
+        v = self.mor_deltas
+        if not (isinstance(v, bool) or v == "auto"):
+            raise ValueError(f"mor_deltas must be True, False or 'auto'; got {v!r}")

@@ -2244,20 +2244,24 @@ class LakeTable:
         compression knobs here). ``sort_order`` uses a range repartition
         so files are globally clustered on the sort key (layout for
         downstream range pruning). ``compression`` falls back to the
-        table's ``write.compression`` property, then zstd (snappy for text
-        formats)."""
+        table's ``write.compression`` property, then zstd, for the columnar
+        formats; text formats fall back to snappy."""
         df = self.read_logical()
         if sort_order:
             df = df.repartitionByRange(*[F.col(c) for c in sort_order]).sortWithinPartitions(
                 *sort_order
             )
-        # zstd is a columnar-format codec only (Spark's json/csv writers
-        # lack it): text exports keep snappy
-        codec = (
-            compression
-            or self.meta.get("properties", {}).get("write.compression")
-            or (DEFAULT_COMPRESSION if format in ("parquet", "orc") else "snappy")
-        )
+        # the table's data-file codec (zstd by default) is a columnar-format
+        # codec; Spark's json/csv writers lack zstd, so text exports ignore
+        # it and keep snappy
+        if format in ("parquet", "orc"):
+            default = (
+                self.meta.get("properties", {}).get("write.compression")
+                or DEFAULT_COMPRESSION
+            )
+        else:
+            default = "snappy"
+        codec = compression or default
         writer = (
             df.write.mode("overwrite")
             .option("maxRecordsPerFile", target_file_size_rows)

@@ -40,15 +40,12 @@ from nvimagecodec_spark.operators.text import (
     tfidf_top_terms,
     unigram_logloss,
 )
-from nvimagecodec_spark.operators.skew import hot_keys, with_salt
 
 __all__ = [
     "lww_dedupe",
     "lww_dedupe_window",
     "merge_into",
     "MergeResult",
-    "hot_keys",
-    "with_salt",
     "media_metadata",
     "decode_images",
     "resize_images",

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import threading
 import time
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -240,8 +240,6 @@ def merge_into(
     tag: dict | None = None,
     broadcast_threshold_rows: int = 100_000,
     batch_counts: tuple[int, int] | None = None,
-    split_light_buckets: bool = False,
-    light_bucket_max_rows: int = 1_000,
     delta_auto_ratio: float | None = None,
     batch_transform=None,
     staged: bool = False,
@@ -259,20 +257,6 @@ def merge_into(
 
     Exactly-once: if ``tag`` = {source_id, batch_id} already committed, the
     merge is a no-op (replay safety; T3 in SURVEY §2.8).
-
-    ``split_light_buckets`` enables the CROSS-STRATEGY SPLIT for bimodal
-    epochs in the sort-merge regime (reference analog: one batch divided
-    across backends by hw_load fraction,
-    /root/reference/extensions/nvjpeg/hw_decoder.cpp:520-532): buckets
-    whose batch slice is tiny (≤ ``light_bucket_max_rows``) are applied
-    via the broadcast path — their TABLE data never shuffles — while the
-    heavy buckets take the sort-merge path; both halves land in ONE
-    atomic commit. Measured on a 3M-row table with a 200k-events-on-2-
-    buckets + trickle-everywhere epoch: ~5% over all-sort-merge at this
-    SF; the win grows with the table-rows-to-batch-rows ratio of the
-    light buckets (it's exactly their table-side shuffle that's saved).
-    Off by default — per-batch strategy choice is the right shape for
-    unimodal epochs.
     """
     t0 = time.time()
     if staged:
@@ -378,8 +362,11 @@ def merge_into(
         # baseline capture would be INCLUDED in the baseline and silently
         # swapped out (review-caught lost-update window).
         snap0 = table.current_snapshot()
-        tset0 = set(touched)
-        assumed = {f["path"] for f in snap0.files_for_buckets(tset0)}
+        assumed = {f["path"] for f in snap0.files_for_buckets(set(touched))}
+        summary = {"upserts": n_upserts, "deletes": n_deletes}
+        small = n_batch <= broadcast_threshold_rows
+        # small epochs execute and commit with AQE off (_small_batch_confs)
+        confs = _small_batch_confs(table.spark) if small else nullcontext()
         if not assumed:
             # INITIAL-LOAD fast path: every touched bucket is empty (no data
             # files, no delta layers — files_for_buckets returns both), so
@@ -396,9 +383,7 @@ def merge_into(
             # Serializable vs racers: replace_buckets/stage_buckets still
             # validate assumed_files == ∅ at commit, so a concurrent first
             # writer aborts exactly as before.
-            summary = {"upserts": n_upserts, "deletes": n_deletes}
-
-            def run_initial() -> MergeResult:
+            with confs:
                 merged = batch.select(*all_cols)
                 if staged:
                     sid = table.stage_buckets(
@@ -417,11 +402,6 @@ def merge_into(
                     snap, sorted(touched), n_upserts, n_deletes,
                     time.time() - t0, "initial-load",
                 )
-
-            if n_batch <= broadcast_threshold_rows:
-                with _small_batch_confs(table.spark):
-                    return run_initial()
-            return run_initial()
         current = table.read(
             snapshot_id=snap0.snapshot_id, buckets=touched, with_system=True
         )
@@ -434,42 +414,12 @@ def merge_into(
         # path then applies the identical semantics with one shuffle.
         # Safe to retry: data files written by a failed attempt are
         # orphans until the metadata commit, which is the last step.
-        if n_batch <= broadcast_threshold_rows:
+        if small:
             chain = [("broadcast", _merge_broadcast), ("sort-merge", _merge_sortmerge)]
         else:
             chain = [("sort-merge", _merge_sortmerge)]
-            if split_light_buckets:
-                light = [
-                    r[BUCKET_COL]
-                    for r in stats
-                    if (int(r["u"] or 0) + int(r["d"] or 0)) <= light_bucket_max_rows
-                ]
-                light_rows = sum(
-                    int(r["u"] or 0) + int(r["d"] or 0)
-                    for r in stats
-                    if r[BUCKET_COL] in set(light)
-                )
-                heavy = [b for b in touched if b not in set(light)]
-                if light and heavy and light_rows <= broadcast_threshold_rows:
 
-                    def _merge_split(cur_ignored, batch_df, kc, ac, _l=light, _h=heavy):
-                        sid = snap0.snapshot_id  # same pinned snapshot
-                        cur_h = table.read(snapshot_id=sid, buckets=_h, with_system=True)
-                        cur_l = table.read(snapshot_id=sid, buckets=_l, with_system=True)
-                        b_h = batch_df.where(F.col(BUCKET_COL).isin(_h))
-                        b_l = batch_df.where(F.col(BUCKET_COL).isin(_l))
-                        return _merge_sortmerge(cur_h, b_h, kc, ac).unionByName(
-                            _merge_broadcast(cur_l, b_l, kc, ac)
-                        )
-
-                    chain = [
-                        (f"split(light:{len(light)},heavy:{len(heavy)})", _merge_split),
-                        ("sort-merge", _merge_sortmerge),
-                    ]
-
-        summary = {"upserts": n_upserts, "deletes": n_deletes}
-
-        def run_chain() -> MergeResult:
+        with confs:
             last_err: Exception | None = None
             for strategy, impl in chain:
                 try:
@@ -503,11 +453,6 @@ def merge_into(
                     if strategy == chain[-1][0]:
                         raise
             raise last_err  # pragma: no cover — loop always returns or raises
-
-        if n_batch <= broadcast_threshold_rows:
-            with _small_batch_confs(table.spark):
-                return run_chain()
-        return run_chain()
     finally:
         batch.unpersist()
 

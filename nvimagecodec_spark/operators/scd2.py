@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from nvimagecodec_spark.lakehouse.incremental import last_synced_batch_id
 from nvimagecodec_spark.operators.lww import KEY_COLS, ORDER_COLS, _ord_struct
 
 
@@ -236,17 +237,7 @@ class Scd2View:
 
     # ----------------------------------------------------------- sync
     def last_synced_base_snapshot(self) -> int | None:
-        ids = [
-            s["tag"]["batch_id"]
-            for s in self.table.meta["snapshots"]
-            if s.get("tag", {}) and s["tag"].get("source_id") == self.SOURCE_ID
-        ]
-        ids += [
-            b
-            for (src, b) in self.table.meta.get("expired_tags", [])
-            if src == self.SOURCE_ID
-        ]
-        return max(ids) if ids else None
+        return last_synced_batch_id(self.table, self.SOURCE_ID)
 
     def sync(self, base, to_id: int | None = None):
         """Fold base changes since the last sync into new version rows."""

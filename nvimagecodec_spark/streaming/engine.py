@@ -14,7 +14,7 @@ Two run modes over the same epoch function:
 
 Epoch anatomy (both modes), mirroring SURVEY §3.1:
   parse → split schema events → apply schema updates (barrier before data,
-  LSN-ordered) → LWW dedupe (salted if the epoch is hot) → strategy-chosen
+  LSN-ordered) → LWW dedupe → strategy-chosen
   MERGE INTO (broadcast vs sort-merge) → lineage append → tagged atomic
   snapshot commit. The commit is the LAST thing to happen before the
   checkpoint advances; "merge applied but checkpoint not advanced" replays
@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nvimagecodec_spark.config import EngineConfig
+from nvimagecodec_spark.lakehouse.incremental import last_synced_batch_id
 from nvimagecodec_spark.lakehouse.table import (
     CommitConflict,
     ConcurrentModification,
@@ -43,13 +44,9 @@ from nvimagecodec_spark.operators.schema_events import (
     reextract_payloads,
     split_schema_events,
 )
-from nvimagecodec_spark.operators.skew import lww_dedupe_salted
 from nvimagecodec_spark.sources.changelog import ChangeStream, parse_changes, with_lineage
 from nvimagecodec_spark.streaming.lineage import LineageLog
-from nvimagecodec_spark.streaming.ratelimit import (
-    AdaptiveRateController,
-    AdaptiveSplitController,
-)
+from nvimagecodec_spark.streaming.ratelimit import AdaptiveRateController
 
 
 class CdcEngine:
@@ -88,17 +85,6 @@ class CdcEngine:
             cap=self.config.target_batch_events,
             min_cap=self.config.min_batch_events,
             max_cap=self.config.max_batch_events,
-        )
-        # split_light_buckets="auto": feedback-tuned split fraction
-        # (reference adjustBatchSizes); seeded by light_bucket_max_rows,
-        # never above the broadcast row threshold.
-        self.split_ctl = (
-            AdaptiveSplitController(
-                threshold=self.config.light_bucket_max_rows,
-                max_threshold=self.config.broadcast_threshold_rows,
-            )
-            if self.config.split_light_buckets == "auto"
-            else None
         )
 
     # how many per-source-file lineage rows an epoch record keeps verbatim
@@ -260,6 +246,31 @@ class CdcEngine:
             "n_schema_events": n_schema,
         }
 
+    def _write_epoch_sink(self, rows: DataFrame, n: int, path: str, batch_id: int) -> None:
+        """Preserve rows an epoch withheld from the apply (dead letters,
+        constraint violations) under ``path``, partitioned by (source_id,
+        batch_id) and written with dynamic-partition OVERWRITE: a crash-
+        replayed epoch rewrites ITS partition instead of appending
+        duplicates — the sink is exactly-once like the table commit it
+        rides along with.
+
+        coalesce(1) is right for a trickle (one tidy file per epoch) but a
+        poison storm — a misconfigured upstream emitting millions of bad
+        rows — must not funnel through one task while the healthy path
+        stays parallel. coalesce can't RAISE parallelism (a single poison
+        file reads as one split), so a storm pays one bounded repartition
+        shuffle for 8-way sink writes."""
+        rows = rows.withColumns(
+            {"source_id": F.lit(self.source_id), "batch_id": F.lit(batch_id)}
+        )
+        rows = rows.coalesce(1) if n <= 50_000 else rows.repartition(8)
+        (
+            rows.write.partitionBy("source_id", "batch_id")
+            .option("partitionOverwriteMode", "dynamic")
+            .mode("overwrite")
+            .parquet(path)
+        )
+
     # ------------------------------------------------------------- epoch core
     def apply_epoch(
         self,
@@ -350,31 +361,12 @@ class CdcEngine:
         if n_dead and self.config.dead_letter_dir and has_dead:
             # sink keeps the raw line + lineage so operators can replay it
             # after registering the missing format (the reference never
-            # loses a sample — it latches UNSUPPORTED). Partitioned by
-            # (source_id, batch_id) and written with dynamic-partition
-            # OVERWRITE: a crash-replayed epoch rewrites ITS partition
-            # instead of appending duplicates — the sink is exactly-once
-            # like the table commit it rides along with.
-            dl = events.where(~usable).select(
-                "src_file",
-                "src_offset",
-                "raw_value",
-                F.lit(self.source_id).alias("source_id"),
-                F.lit(batch_id).alias("batch_id"),
-            )
-            # coalesce(1) is right for trickle dead letters (one tidy file
-            # per epoch) but a poison storm — a misconfigured upstream
-            # emitting millions of bad lines — must not funnel through one
-            # task while the healthy path stays parallel. coalesce can't
-            # RAISE parallelism (a single poison file reads as one split),
-            # so a storm pays one bounded repartition shuffle for 8-way
-            # sink writes.
-            dl = dl.coalesce(1) if n_dead <= 50_000 else dl.repartition(8)
-            (
-                dl.write.partitionBy("source_id", "batch_id")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(self.config.dead_letter_dir)
+            # loses a sample — it latches UNSUPPORTED)
+            self._write_epoch_sink(
+                events.where(~usable).select("src_file", "src_offset", "raw_value"),
+                n_dead,
+                self.config.dead_letter_dir,
+                batch_id,
             )
 
         data, schema_ev = split_schema_events(claimed)
@@ -393,18 +385,14 @@ class CdcEngine:
         n_events = stats["n_events"]
         hot = stats["max_key_events"] > self.config.hot_key_threshold
         # Hot epochs are DETECTED and recorded in lineage (monitoring /
-        # alerting), but the dedupe stays on plain lww_dedupe: its
-        # map-side partial max already collapses a hot key to one row
-        # per map partition before the shuffle, so the reducer sees at
-        # most num_map_tasks rows per key. Measured on a 10M-event
-        # stream with 50% of events on ONE key at local[32]: plain
-        # 1.2s, salted 3.6s — the salt's second shuffle strictly loses
-        # when the agg is combinable. lww_dedupe_salted remains the
-        # tool for NON-combinable formulations (see operators/skew.py).
-        if hot and self.config.salt_non_combinable:
-            deduped = lww_dedupe_salted(data, salt_buckets=self.config.salt_buckets)
-        else:
-            deduped = lww_dedupe(data)
+        # alerting) only: lww_dedupe's map-side partial max already
+        # collapses a hot key to one row per map partition before the
+        # shuffle, so the reducer sees at most num_map_tasks rows per key.
+        # Measured on a 10M-event stream with 50% of events on ONE key at
+        # local[32]: 1.2s, vs 3.6s for a two-phase dedupe that first spread
+        # the hot key over random sub-keys — its second shuffle strictly
+        # loses when the agg is combinable.
+        deduped = lww_dedupe(data)
 
         n_violations = 0
         if self.config.constraints:
@@ -419,18 +407,11 @@ class CdcEngine:
             try:
                 n_violations = violations.count()
                 if n_violations and self.config.constraint_violation_dir:
-                    (
-                        violations.withColumns(
-                            {
-                                "source_id": F.lit(self.source_id),
-                                "batch_id": F.lit(batch_id),
-                            }
-                        )
-                        .coalesce(1 if n_violations <= 50_000 else 8)
-                        .write.partitionBy("source_id", "batch_id")
-                        .option("partitionOverwriteMode", "dynamic")
-                        .mode("overwrite")
-                        .parquet(self.config.constraint_violation_dir)
+                    self._write_epoch_sink(
+                        violations,
+                        n_violations,
+                        self.config.constraint_violation_dir,
+                        batch_id,
                     )
             finally:
                 violations.unpersist()
@@ -448,12 +429,6 @@ class CdcEngine:
             # whose CoW rewrite would exceed ratio x batch rows go delta,
             # backfills/initial loads stay CoW (G4 adaptive-split analog)
             auto = self.config.mor_deltas == "auto"
-            if self.split_ctl is not None:
-                planned = self.split_ctl.plan()  # 0 = baseline probe epoch
-                do_split, light_max = planned > 0, planned or 1
-            else:
-                do_split = bool(self.config.split_light_buckets)
-                light_max = self.config.light_bucket_max_rows
             res = merge_into(
                 self.table,
                 deduped,
@@ -462,18 +437,12 @@ class CdcEngine:
                 # staging is CoW by contract
                 tag=None if staged else {"source_id": self.source_id, "batch_id": batch_id},
                 broadcast_threshold_rows=self.config.broadcast_threshold_rows,
-                split_light_buckets=do_split,
-                light_bucket_max_rows=light_max,
                 delta_auto_ratio=(
                     None if staged else (self.config.mor_auto_ratio if auto else None)
                 ),
                 batch_transform=self.batch_transform,
                 staged=staged,
             )
-            if self.split_ctl is not None:
-                self.split_ctl.observe(
-                    res.strategy, res.upserts + res.deletes, res.duration_sec
-                )
         # the adaptive controller's signal is steady-state APPLY
         # throughput — including the periodic maintenance below would
         # shrink the cap after every sweep epoch (review-caught)
@@ -555,9 +524,6 @@ class CdcEngine:
                 "duration_sec": round(duration, 3),
                 "events_per_sec": round(n_events / duration, 1) if duration > 0 else None,
                 "next_rate_cap": self.rate.cap,
-                "split_threshold": (
-                    int(self.split_ctl.threshold) if self.split_ctl else None
-                ),
                 "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
             }
         )
@@ -700,13 +666,9 @@ class CdcEngine:
         # collision makes apply_epoch no-op ("skipped-duplicate") while
         # the loop advances `last` past real events (review-caught).
         self.table.refresh()
-        for s_ in self.table.meta["snapshots"]:
-            t_ = s_.get("tag")
-            if t_ and t_.get("source_id") == self.source_id:
-                batch_id = max(batch_id, int(t_.get("batch_id", -1)) + 1)
-        for sid, bid in self.table.meta.get("expired_tags", []):
-            if sid == self.source_id:
-                batch_id = max(batch_id, int(bid) + 1)
+        committed = last_synced_batch_id(self.table, self.source_id)
+        if committed is not None:
+            batch_id = max(batch_id, int(committed) + 1)
         top = stream.max_lsn()
         if top is None or last >= top:
             return 0

@@ -48,87 +48,3 @@ class AdaptiveRateController:
         self.alpha = max(self.alpha * self.decay, self.alpha_floor)
         return self.cap
 
-
-@dataclass
-class AdaptiveSplitController:
-    """Feedback-tuned CROSS-STRATEGY SPLIT fraction (round-3 verdict #6).
-
-    The reference re-tunes each backend's share of the batch every
-    iteration from the previous iteration's timings
-    (``adjustBatchSizes`` + ``ADAPTIVE_MINIMIZE_IDLE_TIME``,
-    /root/reference/src/image_generic_codec.h:1064-1123); the engine's
-    analog knob is ``light_bucket_max_rows`` — how small a bucket's batch
-    slice must be to ride the broadcast path while heavy buckets take
-    sort-merge. Previously a static opt-in constant; now a feedback loop:
-
-    - ``plan()`` returns the threshold for the next epoch; every
-      ``probe_every``-th eligible epoch returns 0 (plain sort-merge) so
-      the baseline EWMA stays fresh — a perpetual interleaved A/B, the
-      only timing methodology that survives this host's ±60% load
-      variance (BENCH/BASELINE.md).
-    - ``observe()`` folds the epoch's apply throughput into the strategy's
-      EWMA and nudges the threshold multiplicatively: split outrunning
-      the baseline → raise (split MORE buckets into broadcast); split
-      behind by >10% → halve. Broadcast-regime and noop epochs carry no
-      signal and leave the controller untouched.
-
-    Ship gate (interleaved A/B, one session, local[32], 600k-event
-    stream → 4 epochs, 3 reps): off med 21.19s vs auto med 21.09s —
-    controller overhead is zero on unimodal workloads where the split
-    never engages; the split's bimodal win (~5% at 3M rows, grows with
-    SF) is the static measurement in merge_into's docstring.
-    """
-
-    threshold: int = 1_000
-    min_threshold: int = 64
-    max_threshold: int = 100_000
-    grow: float = 1.25
-    shrink: float = 0.5
-    deadband: float = 0.9  # split must lose by >10% before backing off
-    ewma_alpha: float = 0.5
-    probe_every: int = 4
-    split_ewma: float | None = None
-    sortmerge_ewma: float | None = None
-    epochs_planned: int = 0
-
-    def __post_init__(self):
-        # the documented invariant is "never above the broadcast row
-        # threshold" — enforce it on the SEED too, and keep the floor
-        # below the ceiling so shrink can never jump back above it
-        # (review-caught: a seed > max_threshold, or min_threshold >
-        # max_threshold, parked the controller permanently in a region
-        # where merge_into's broadcast guard disables the split)
-        self.max_threshold = max(1, int(self.max_threshold))
-        self.min_threshold = max(1, min(int(self.min_threshold), self.max_threshold))
-        self.threshold = float(
-            min(max(self.threshold, self.min_threshold), self.max_threshold)
-        )
-
-    def plan(self) -> int:
-        """Light-bucket threshold for the NEXT epoch (0 = probe epoch:
-        run plain sort-merge to refresh the baseline)."""
-        self.epochs_planned += 1
-        if self.probe_every and self.epochs_planned % self.probe_every == 0:
-            return 0
-        return int(self.threshold)
-
-    def _fold(self, prev: float | None, value: float) -> float:
-        if prev is None:
-            return value
-        return self.ewma_alpha * value + (1 - self.ewma_alpha) * prev
-
-    def observe(self, strategy: str, rows: int, seconds: float) -> int:
-        """Record an epoch's apply outcome; returns the updated threshold."""
-        if rows <= 0 or seconds <= 0:
-            return int(self.threshold)
-        rate = rows / seconds
-        if strategy.startswith("split"):
-            self.split_ewma = self._fold(self.split_ewma, rate)
-            if self.sortmerge_ewma:
-                if self.split_ewma >= self.sortmerge_ewma:
-                    self.threshold = min(self.max_threshold, self.threshold * self.grow)
-                elif self.split_ewma < self.deadband * self.sortmerge_ewma:
-                    self.threshold = max(self.min_threshold, self.threshold * self.shrink)
-        elif strategy == "sort-merge":
-            self.sortmerge_ewma = self._fold(self.sortmerge_ewma, rate)
-        return int(self.threshold)

@@ -193,57 +193,6 @@ def test_lww_matches_pandas_reference(spark, events):
     assert got == exp
 
 
-def test_split_strategy_matches_sortmerge_result(spark, tmp_path):
-    """Cross-strategy split (bimodal epoch): light buckets via broadcast +
-    heavy via sort-merge in ONE commit must produce exactly the state the
-    plain sort-merge produces, and report a split strategy."""
-    import json as _json
-
-    import pyspark.sql.functions as _F
-
-    t1 = LakeTable.create(spark, str(tmp_path / "a"), SCHEMA, ["conv_id", "turn_idx"], 8)
-    t2 = LakeTable.create(spark, str(tmp_path / "b"), SCHEMA, ["conv_id", "turn_idx"], 8)
-    base = spark.range(2000).select(
-        _F.concat(_F.lit("conv-"), _F.col("id").cast("string")).alias("conv_id"),
-        _F.lit(0).cast("int").alias("turn_idx"),
-        _F.col("id").alias("lsn"),
-        _F.to_timestamp(_F.lit("2025-01-01 00:00:00")).alias("commit_ts"),
-        _F.lit("f").alias("src_file"),
-        _F.col("id").alias("src_offset"),
-        _F.lit("I").alias("op"),
-        _F.to_json(_F.struct(_F.concat(_F.lit("v"), _F.col("id").cast("string")).alias("text"))).alias("after"),
-    )
-    for t in (t1, t2):
-        merge_into(t, lww_dedupe(base))
-
-    # bimodal epoch: every key of 2 buckets heavily updated + a trickle
-    bucket = _F.pmod(_F.xxhash64("conv_id", "turn_idx"), _F.lit(8))
-    heavy = base.where(bucket.isin(0, 1)).withColumn("lsn", _F.col("lsn") + 10_000)
-    heavy = heavy.withColumn("op", _F.lit("U")).withColumn(
-        "after", _F.to_json(_F.struct(_F.lit("updated").alias("text")))
-    )
-    light = base.where(~bucket.isin(0, 1)).limit(5).withColumn("lsn", _F.col("lsn") + 10_000)
-    light = light.withColumn("op", _F.lit("U")).withColumn(
-        "after", _F.to_json(_F.struct(_F.lit("trickle").alias("text")))
-    )
-    epoch = heavy.unionAll(light)
-
-    res_plain = merge_into(t1, lww_dedupe(epoch), broadcast_threshold_rows=10)
-    res_split = merge_into(
-        t2,
-        lww_dedupe(epoch),
-        broadcast_threshold_rows=10,
-        split_light_buckets=True,
-        light_bucket_max_rows=100,
-    )
-    assert res_plain.strategy == "sort-merge"
-    assert res_split.strategy.startswith("split("), res_split.strategy
-    a = {(r["conv_id"], r["turn_idx"]): r["text"] for r in t1.read_logical().collect()}
-    b = {(r["conv_id"], r["turn_idx"]): r["text"] for r in t2.read_logical().collect()}
-    assert a == b and len(a) == 2000
-    assert sum(1 for v in b.values() if v == "trickle") == 5
-
-
 def test_initial_load_fast_path_semantics(spark, tmp_path):
     """First merge into empty buckets skips the join entirely (the resolve
     side is empty, no key can match) but must land EXACTLY what the chain

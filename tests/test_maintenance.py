@@ -59,6 +59,20 @@ def test_export_sorted_layout(spark, tmp_path):
         assert keys == sorted(keys)
 
 
+def test_text_export_ignores_columnar_codec_property(spark, tmp_path):
+    """A table whose data files are zstd still exports json/csv: Spark's
+    text writers have no zstd codec, so the property must not reach them."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), SCHEMA, ["conv_id", "turn_idx"], 4,
+        properties={"write.compression": "zstd"},
+    )
+    t.append(_rows(spark, 50))
+    for fmt in ("json", "csv"):
+        out = str(tmp_path / f"export_{fmt}")
+        t.export(out, format=fmt)
+        assert spark.read.format(fmt).load(out).count() == 50
+
+
 def test_schema_log_tracks_versions(spark, tmp_path):
     t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, ["conv_id", "turn_idx"], 4)
     t.add_column("rating", "int")

@@ -8,7 +8,6 @@ import os
 import shutil
 
 import pandas as pd
-import pytest
 from pyspark.sql import types as T
 
 from nvimagecodec_spark.config import EngineConfig
@@ -406,74 +405,3 @@ def test_interval_trigger_soak_kill_resume(spark, tmp_dir):
     )
     engine3.run_stream(stream_dir, max_files_per_trigger=4)
     assert table.current_snapshot().snapshot_id == snap
-
-
-def test_adaptive_split_controller_dynamics():
-    """Round-3 verdict #6 unit semantics: the split fraction is a feedback
-    loop, not a constant. Probe epochs keep the sort-merge baseline fresh;
-    a split that outruns the baseline widens (more buckets to broadcast),
-    a split >10% behind halves; broadcast/noop epochs carry no signal."""
-    from nvimagecodec_spark.streaming.ratelimit import AdaptiveSplitController
-
-    c = AdaptiveSplitController(threshold=1000, probe_every=4)
-    # epochs 1-3 split-enabled, epoch 4 is the baseline probe
-    plans = [c.plan() for _ in range(4)]
-    assert plans[:3] == [1000, 1000, 1000] and plans[3] == 0
-
-    # baseline: sort-merge at 10k rows/s
-    c.observe("sort-merge", 100_000, 10.0)
-    assert c.sortmerge_ewma == pytest.approx(10_000)
-    # split running FASTER -> threshold grows
-    c.observe("split(light:3,heavy:2)", 120_000, 10.0)
-    assert c.threshold == pytest.approx(1250)
-    # split collapsing to half the baseline -> EWMA drops below the
-    # deadband after one more observation, threshold backs off
-    c.observe("split(light:3,heavy:2)", 30_000, 10.0)
-    assert c.threshold == pytest.approx(625)
-    # floor respected under sustained losses
-    for _ in range(10):
-        c.observe("split(light:1,heavy:1)", 10_000, 10.0)
-    assert c.threshold == c.min_threshold
-    # strategies outside the split regime never move the knob
-    t = c.threshold
-    c.observe("broadcast", 50_000, 1.0)
-    c.observe("noop", 0, 0.0)
-    assert c.threshold == t
-    # recovery: splits beating the baseline again grow the threshold back
-    for _ in range(6):
-        c.observe("split(light:2,heavy:2)", 500_000, 10.0)
-    assert c.threshold > t
-    # cap respected
-    for _ in range(40):
-        c.observe("split(light:2,heavy:2)", 500_000, 10.0)
-    assert c.threshold == c.max_threshold
-
-
-def test_engine_auto_split_probes_and_adapts(spark, tmp_dir):
-    """split_light_buckets='auto' end to end: the engine plans a threshold
-    per epoch (periodic probe epochs run plain sort-merge), observes apply
-    throughput, and records the evolving threshold in lineage — final
-    state stays oracle-identical regardless of which strategy each epoch
-    took."""
-    events, stream_dir, table = _setup(spark, tmp_dir, n_events=2000, with_schema=False, files=8)
-    cfg = EngineConfig(
-        split_light_buckets="auto",
-        # tiny broadcast threshold forces the sort-merge/split regime so
-        # the controller actually engages on this small fixture
-        broadcast_threshold_rows=10,
-        light_bucket_max_rows=50,
-        expire_every_epochs=0,
-    )
-    engine = CdcEngine(spark, table, source_id="autosplit", config=cfg)
-    n = engine.run_stream(stream_dir, max_files_per_trigger=2)
-    assert n >= 3
-    _assert_matches_oracle(table, events)
-    recs = engine.lineage()
-    assert all(r["split_threshold"] is not None for r in recs)
-    # the controller planned every epoch: probe cadence means epoch 4
-    # (plan #4) ran the plain path; strategies must all be valid
-    assert engine.split_ctl.epochs_planned == n
-    for r in recs:
-        assert r["strategy"].startswith(
-            ("split", "sort-merge", "broadcast", "delta", "noop", "initial-load")
-        )
