@@ -1326,7 +1326,9 @@ def q_cdc_op_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cdc_hot_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G1 skew stats: hot conv_ids + the salt factor the engine would use.
+    """G1 skew stats: hot conv_ids + an advisory ``salt_factor`` (events
+    per threshold share). No engine path acts on it: the engine dedupes
+    without salting and only reports hot epochs in lineage.
 
     SINGLE pass (round-3 verdict #5): the threshold (0.5% of total events,
     min 1) is derived in-plan from a global window over the per-key

@@ -46,7 +46,7 @@ def changed_buckets(table: LakeTable, from_id: int, to_id: int) -> list[int]:
     """Buckets whose file sets differ between the two snapshots (manifest
     diff — no data read).
 
-    Fast path: v2 snapshots name per-bucket manifests by a hash of their
+    Snapshots name per-bucket manifests by a hash of their
     CONTENT ("unchanged buckets reuse their existing manifest file
     byte-for-byte"), so comparing manifest NAMES across the two
     manifest-LISTS answers the question in O(occupied buckets) without
@@ -56,25 +56,9 @@ def changed_buckets(table: LakeTable, from_id: int, to_id: int) -> list[int]:
     this, every read_changes call (one per view sync per epoch) fully
     materialized both snapshots' manifests on the driver — exactly the
     cost the lazy-manifest tier exists to avoid."""
-    from nvimagecodec_spark.lakehouse.table import _LazyFiles
-
-    old = table.snapshot(from_id).files
-    new = table.snapshot(to_id).files
-    if isinstance(old, _LazyFiles) and isinstance(new, _LazyFiles):
-        om = {e["bucket"]: e["manifest"] for e in old.entries}
-        nm = {e["bucket"]: e["manifest"] for e in new.entries}
-        return sorted(b for b in set(om) | set(nm) if om.get(b) != nm.get(b))
-    by_bucket_old: dict[int, set] = {}
-    by_bucket_new: dict[int, set] = {}
-    for f in old:
-        by_bucket_old.setdefault(f["bucket"], set()).add(f["path"])
-    for f in new:
-        by_bucket_new.setdefault(f["bucket"], set()).add(f["path"])
-    out = []
-    for b in set(by_bucket_old) | set(by_bucket_new):
-        if by_bucket_old.get(b, set()) != by_bucket_new.get(b, set()):
-            out.append(b)
-    return sorted(out)
+    om = {e["bucket"]: e["manifest"] for e in table.snapshot(from_id).files.entries}
+    nm = {e["bucket"]: e["manifest"] for e in table.snapshot(to_id).files.entries}
+    return sorted(b for b in set(om) | set(nm) if om.get(b) != nm.get(b))
 
 
 def read_changes_for_tags(

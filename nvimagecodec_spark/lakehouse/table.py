@@ -6,9 +6,10 @@ needs:
 
 - **Atomic snapshot commits.** Every commit writes a new immutable
   ``metadata/v%08d.metadata.json`` and then atomically flips
-  ``metadata/version-hint.text`` via ``os.replace`` (POSIX atomic rename).
-  Readers resolve the hint first, so they always see a complete snapshot —
-  never a half-written one. Reference analog: the cross-stream commit
+  ``metadata/version-hint.text`` via ``os.replace`` (POSIX atomic rename;
+  the protocol lives in ``commit.py``). Readers resolve the hint first, so
+  they always see a complete snapshot — never a half-written one.
+  Reference analog: the cross-stream commit
   barrier — results are never visible mid-epoch
   (/root/reference/src/image_generic_codec.h:605-638).
 - **Commit tags → exactly-once.** A commit may carry
@@ -24,9 +25,14 @@ needs:
   stable field ids; renames never rewrite data (see ``schema.py``).
 - **Time travel**: any historical snapshot can be read by id.
 
-Concurrency model: optimistic single-writer per table (O_EXCL create of the
-next metadata version; a concurrent writer loses and retries), which is
-exactly Iceberg's optimistic-commit protocol shape.
+Concurrency model: optimistic commits, exactly Iceberg's protocol shape.
+Every metadata write — snapshot commits on main or a branch, tag and
+branch moves, staging, expiry — is one ``_update_meta(mutate)`` through
+``commit.VersionedFileStore.update``: the next version is created
+exclusively, and a writer that loses the race re-runs its ``mutate``
+against the winner's metadata, so nothing a racer committed is dropped.
+Data-level conflicts (a racer rewrote the buckets a merge read) raise
+``ConcurrentModification`` from inside that ``mutate``.
 """
 
 from __future__ import annotations
@@ -42,6 +48,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nvimagecodec_spark.lakehouse.commit import (  # CommitConflict: re-exported
+    CommitConflict,
+    VersionedFileStore,
+)
 from nvimagecodec_spark.lakehouse.schema import (
     TableSchema,
     spark_type_from_name,
@@ -117,24 +127,24 @@ def order_struct(prefix: str = "") -> F.Column:
 
 
 class _LazyFiles:
-    """List-like view of a snapshot's data-file entries that loads
+    """Iterable view of a snapshot's data-file entries that loads
     per-bucket manifests ON DEMAND instead of eagerly parsing every
     manifest at snapshot access. Three access tiers:
 
-    - metadata only (``entries`` / ``n_files`` / ``buckets``): reads the
+    - metadata only (``entries`` / ``n_files``): reads the
       manifest-LIST alone — O(occupied buckets), never a file entry;
     - bucket-pruned (``for_buckets``): parses only the selected buckets'
       manifests — a point ``lookup`` pays 1/B of the metadata, and the
       per-file key blooms of the other B-1 buckets never reach the
       driver;
-    - full (iteration / len / indexing): materializes everything, as the
-      eager path always did — maintenance ops keep working unchanged.
+    - full (iteration / len): materializes everything — maintenance ops
+      that walk every file.
 
     Reference analog: lazy parse-on-access of a multi-image container —
     metadata is decoded when a view asks for it, not at stream open
     (/root/reference/src/code_stream.cpp:201 ensureParsed)."""
 
-    def __init__(self, table: "LakeTable", manifest_list: str):
+    def __init__(self, table: "LakeTable", manifest_list: str | None):
         self._table = table
         self._ml = manifest_list
         self._entries: list[dict] | None = None
@@ -144,17 +154,20 @@ class _LazyFiles:
     @property
     def entries(self) -> list[dict]:
         if self._entries is None:
-            self._entries = self._table._load_manifest(
-                os.path.join(self._table._manifest_dir, self._ml)
+            # tables created by older versions stored snapshot 1 (empty)
+            # without a manifest-list
+            self._entries = (
+                self._table._load_manifest(
+                    os.path.join(self._table._manifest_dir, self._ml)
+                )
+                if self._ml
+                else []
             )
         return self._entries
 
     @property
     def n_files(self) -> int:
         return sum(int(e.get("n_files", 0)) for e in self.entries)
-
-    def buckets(self) -> set[int]:
-        return {e["bucket"] for e in self.entries}
 
     def manifest_path(self, entry: dict) -> str:
         return os.path.join(self._table._manifest_dir, entry["manifest"])
@@ -188,21 +201,6 @@ class _LazyFiles:
     def __len__(self) -> int:
         return len(self._materialize())
 
-    def __getitem__(self, i):
-        return self._materialize()[i]
-
-    def __add__(self, other: list) -> list:
-        return self._materialize() + list(other)
-
-    def __radd__(self, other: list) -> list:
-        return list(other) + self._materialize()
-
-    def __bool__(self) -> bool:
-        return any(int(e.get("n_files", 0)) for e in self.entries)
-
-    def __eq__(self, other) -> bool:
-        return self._materialize() == other
-
 
 @dataclass
 class Snapshot:
@@ -210,21 +208,13 @@ class Snapshot:
     parent_id: int | None
     timestamp_ms: int
     operation: str  # "append" | "merge" | "overwrite" | "create" | "schema" | "delta"
-    files: list[dict]  # [{"path": str, "bucket": int, "rows": int[, "kind": "delta"]}]
+    # [{"path": str, "bucket": int, "rows": int[, "kind": "delta"]}], loaded
+    # lazily through the manifest-list — see LakeTable._write_manifests
+    files: _LazyFiles
     summary: dict = field(default_factory=dict)
     tag: dict | None = None  # {"source_id": str, "batch_id": int}
     schema_version: int = 0
-    # v2 metadata: persisted snapshots carry a manifest-list PATH instead of
-    # the inline `files` list (which is loaded lazily through it) — see
-    # LakeTable._write_manifests. None on legacy v1 entries.
-    manifest_list: str | None = None
-
-    def files_for_buckets(self, bset: set[int]) -> list[dict]:
-        """Bucket-pruned file entries — loads only the selected buckets'
-        manifests when the snapshot is manifest-backed."""
-        if isinstance(self.files, _LazyFiles):
-            return self.files.for_buckets(bset)
-        return [f for f in self.files if f["bucket"] in bset]
+    manifest_list: str | None = None  # name under metadata/manifests/
 
 
 def _stat_micros(dt) -> int:
@@ -404,10 +394,6 @@ def prune_files_by_range(files: list[dict], phys_ranges: dict) -> list[dict]:
     return out
 
 
-class CommitConflict(RuntimeError):
-    """Another writer committed the same metadata version first."""
-
-
 class ConcurrentModification(RuntimeError):
     """A racing writer changed data this commit was computed from.
 
@@ -418,6 +404,33 @@ class ConcurrentModification(RuntimeError):
     serializable-isolation validation, not just optimistic versioning."""
 
 
+def _swap_buckets(
+    snap: "Snapshot", bset: set[int], assumed: set[str], new_files: list[dict], since: str
+) -> list[dict]:
+    """``snap``'s files with buckets ``bset`` swapped for ``new_files``.
+    Untouched buckets a racing writer committed carry over; if the racer
+    touched OUR buckets (their files are no longer ``assumed``), the new
+    files are stale — abort instead of clobbering its rows."""
+    current = {f["path"] for f in snap.files.for_buckets(bset)}
+    if current != assumed:
+        raise ConcurrentModification(
+            f"buckets {sorted(bset)} changed since {since} "
+            f"({len(assumed)} -> {len(current)} files); re-run the merge"
+        )
+    return [f for f in snap.files if f["bucket"] not in bset] + new_files
+
+
+def _unstage(staged_id: str):
+    """Metadata mutation: drop staged changeset ``staged_id``'s entry."""
+
+    def mutate(meta: dict) -> None:
+        meta["staged"] = [
+            x for x in meta.get("staged", []) if x["staged_id"] != staged_id
+        ]
+
+    return mutate
+
+
 class LakeTable:
     """A transactional, bucket-partitioned, schema-evolving parquet table."""
 
@@ -425,6 +438,9 @@ class LakeTable:
         self.spark = spark
         self.path = os.path.abspath(path)
         self._meta: dict[str, Any] | None = None
+        self._store = VersionedFileStore(
+            self._metadata_dir, "v{:08d}.metadata.json", "version-hint.text"
+        )
         # manifest/manifest-list files are immutable + content-addressed →
         # safe to cache across refreshes for the life of the handle
         self._manifest_cache: dict[str, list] = {}
@@ -442,11 +458,8 @@ class LakeTable:
     def _manifest_dir(self) -> str:
         return os.path.join(self._metadata_dir, "manifests")
 
-    def _hint_path(self) -> str:
-        return os.path.join(self._metadata_dir, "version-hint.text")
-
     def _version_path(self, v: int) -> str:
-        return os.path.join(self._metadata_dir, f"v{v:08d}.metadata.json")
+        return self._store.path(v)
 
     # ------------------------------------------------------------ create/load
     @classmethod
@@ -476,7 +489,7 @@ class LakeTable:
         os.makedirs(t._metadata_dir, exist_ok=False)
         os.makedirs(t._data_dir, exist_ok=True)
         tschema = TableSchema.from_spark(schema)
-        meta = {
+        t._write_version(1, {
             "format_version": 1,
             "table_uuid": str(uuid.uuid4()),
             "location": t.path,
@@ -486,19 +499,9 @@ class LakeTable:
             "properties": properties or {},
             "schemas": [tschema.to_dict()],
             "current_schema_version": 0,
-            "snapshots": [
-                Snapshot(
-                    snapshot_id=1,
-                    parent_id=None,
-                    timestamp_ms=int(time.time() * 1000),
-                    operation="create",
-                    files=[],
-                ).__dict__
-            ],
+            "snapshots": [t._snapshot_entry(1, None, "create", [], {}, None, 0)],
             "current_snapshot_id": 1,
-        }
-        t._write_version(1, meta)
-        t._meta = meta
+        })
         return t
 
     @classmethod
@@ -512,59 +515,24 @@ class LakeTable:
         return os.path.exists(os.path.join(path, "metadata", "version-hint.text"))
 
     def refresh(self) -> "LakeTable":
-        with open(self._hint_path()) as f:
-            v = int(f.read().strip())
-        with open(self._version_path(v)) as f:
-            self._meta = json.load(f)
-        self._meta["_version"] = v
+        self._meta = self._store.read()
         return self
 
     # ---------------------------------------------------------------- meta io
     def _write_version(self, v: int, meta: dict) -> None:
-        meta = {k: val for k, val in meta.items() if not k.startswith("_")}
-        vp = self._version_path(v)
-        # O_EXCL: optimistic concurrency — lose the race, get CommitConflict.
-        try:
-            fd = os.open(vp, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError as e:
-            raise CommitConflict(f"metadata version {v} already committed") from e
-        with os.fdopen(fd, "w") as f:
-            json.dump(meta, f, indent=1, default=str)
-            f.flush()
-            os.fsync(f.fileno())
-        tmp = self._hint_path() + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(str(v))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._hint_path())  # atomic flip — the commit point
-        meta["_version"] = v
-        self._meta = meta
-        self._cleanup_old_versions(v)
+        """THE metadata write: commit ``meta`` as version ``v`` (raises
+        CommitConflict if a racer took it)."""
+        self._meta = self._store.write(v, meta)
 
-    # how many superseded v*.metadata.json files to keep on disk (Iceberg's
-    # write.metadata.previous-versions-max + delete-after-commit analog).
-    # Without this the metadata dir grows by one full metadata copy per
-    # commit forever — the 10^5-epoch bottleneck flagged in round 1.
-    KEEP_METADATA_VERSIONS = 50
-
-    def _cleanup_old_versions(self, current_v: int) -> None:
-        floor = current_v - self.KEEP_METADATA_VERSIONS
-        if floor <= 1:
-            return
-        # cheap targeted probe (no directory listing): versions are dense,
-        # so walking down from the floor until a miss bounds the work to
-        # O(deleted this call), amortized O(1) per commit
-        v = floor
-        while v >= 1:
-            p = self._version_path(v)
-            if not os.path.exists(p):
-                break
-            try:
-                os.remove(p)
-            except OSError:
-                break
-            v -= 1
+    def _update_meta(self, mutate) -> dict | None:
+        """Optimistic metadata update (see ``VersionedFileStore.update``):
+        ``mutate`` edits a fresh copy of the refreshed metadata in place,
+        and re-runs on the winner's metadata after a lost race; returning
+        False writes nothing. Every metadata write of a table goes
+        through here."""
+        return self._store.update(
+            mutate, lambda: self.refresh().meta, self._write_version
+        )
 
     @property
     def meta(self) -> dict:
@@ -670,15 +638,33 @@ class LakeTable:
         return cached
 
     def _entry_to_snapshot(self, entry: dict) -> Snapshot:
-        e = dict(entry)
-        ml = e.get("manifest_list")
-        if ml and not e.get("files"):
-            # LAZY: nothing is parsed until someone actually asks for file
-            # entries, and bucket-pruned readers only parse their buckets'
-            # manifests (_LazyFiles) — snapshot access itself is O(1).
-            e["files"] = _LazyFiles(self, ml)
-        e.setdefault("files", [])
-        return Snapshot(**e)
+        # LAZY: nothing is parsed until someone actually asks for file
+        # entries, and bucket-pruned readers only parse their buckets'
+        # manifests (_LazyFiles) — snapshot access itself is O(1).
+        return Snapshot(**{**entry, "files": _LazyFiles(self, entry["manifest_list"])})
+
+    def _snapshot_entry(
+        self,
+        snapshot_id: int,
+        parent_id: int | None,
+        operation: str,
+        files: list[dict],
+        summary: dict,
+        tag: dict | None,
+        schema_version: int,
+    ) -> dict:
+        """A metadata.json snapshot entry. Its file list goes to manifests
+        (``manifest_list``) and never enters metadata.json."""
+        return {
+            "snapshot_id": snapshot_id,
+            "parent_id": parent_id,
+            "timestamp_ms": int(time.time() * 1000),
+            "operation": operation,
+            "summary": summary,
+            "tag": tag,
+            "schema_version": schema_version,
+            "manifest_list": self._write_manifests(snapshot_id, files),
+        }
 
     def _write_immutable(self, path: str, payload) -> None:
         if os.path.exists(path):
@@ -696,7 +682,8 @@ class LakeTable:
         manifests/MLs are stored relative — to the table root and the
         manifest dir respectively — keeping entries small and the table
         relocatable). Unchanged buckets reuse their existing manifest file
-        byte-for-byte (no write)."""
+        byte-for-byte (no write). The manifest cache is primed with what
+        was written, so reading the new snapshot back parses nothing."""
         import hashlib
 
         os.makedirs(self._manifest_dir, exist_ok=True)
@@ -710,10 +697,17 @@ class LakeTable:
             content = json.dumps(flist, sort_keys=True, default=str)
             h = hashlib.sha1(content.encode()).hexdigest()[:16]
             mname = f"m-{h}.json"
-            self._write_immutable(os.path.join(self._manifest_dir, mname), flist)
+            mpath = os.path.join(self._manifest_dir, mname)
+            self._write_immutable(mpath, flist)
+            if mpath not in self._manifest_cache:
+                # as a reader loads it (default=str stringifies, tuples
+                # become lists)
+                self._manifest_cache[mpath] = json.loads(content)
             entries.append({"bucket": b, "manifest": mname, "n_files": len(flist)})
         ml_name = f"ml-{snapshot_id:08d}-{uuid.uuid4().hex[:8]}.json"
-        self._write_immutable(os.path.join(self._manifest_dir, ml_name), entries)
+        ml_path = os.path.join(self._manifest_dir, ml_name)
+        self._write_immutable(ml_path, entries)
+        self._manifest_cache[ml_path] = entries
         return ml_name
 
     # --------------------------------------------------------------- tags
@@ -723,13 +717,11 @@ class LakeTable:
         Reference analog: once-only status latch
         (/root/reference/src/processing_results.cpp:30-48).
         """
-        for s in self.meta["snapshots"]:
-            tag = s.get("tag")
-            if tag and tag.get("source_id") == source_id and tag.get("batch_id") == batch_id:
-                return True
-        # tags outlive their snapshots: expiry compacts them here so a very
-        # late replay of an ancient batch stays a no-op
-        return [source_id, batch_id] in self.meta.get("expired_tags", [])
+        # tags outlive their snapshots: expiry compacts them into
+        # expired_tags so a very late replay of an ancient batch stays a no-op
+        return self.snapshot_for_tag(source_id, batch_id) is not None or [
+            source_id, batch_id,
+        ] in self.meta.get("expired_tags", [])
 
     def snapshot_for_tag(self, source_id: str, batch_id: int) -> Snapshot | None:
         for s in self.meta["snapshots"]:
@@ -995,30 +987,22 @@ class LakeTable:
         #    pruning runs as a Spark plan over the manifests and the
         #    driver collects only the slim scan handoff;
         # 3. classic driver-side pruning loops for small tables.
-        lazy = snap.files if isinstance(snap.files, _LazyFiles) else None
-        if lazy is not None:
-            est = sum(
-                int(e.get("n_files", 0))
-                for e in lazy.entries
-                if bset is None or e["bucket"] in bset
+        lazy = snap.files
+        est = sum(
+            int(e.get("n_files", 0))
+            for e in lazy.entries
+            if bset is None or e["bucket"] in bset
+        )
+        threshold = int(
+            self.meta.get("properties", {}).get(
+                "read.distributed-manifest-threshold",
+                DISTRIBUTED_MANIFEST_THRESHOLD,
             )
-            threshold = int(
-                self.meta.get("properties", {}).get(
-                    "read.distributed-manifest-threshold",
-                    DISTRIBUTED_MANIFEST_THRESHOLD,
-                )
-            )
-        if lazy is not None and est > threshold:
+        )
+        if est > threshold:
             files = self._prune_distributed(lazy, bset, phys_key_vals, phys_ranges)
         else:
-            if bset is not None:
-                files = (
-                    lazy.for_buckets(bset)
-                    if lazy is not None
-                    else [f for f in snap.files if f["bucket"] in bset]
-                )
-            else:
-                files = snap.files
+            files = lazy.for_buckets(bset) if bset is not None else lazy
             if phys_key_vals:
                 files = prune_files_by_key(files, phys_key_vals, key_string)
             if phys_ranges:
@@ -1290,67 +1274,43 @@ class LakeTable:
         files,  # list[dict] | Callable[[Snapshot], list[dict]]
         summary: dict,
         tag: dict | None = None,
-        schemas: list[dict] | None = None,
-        current_schema_version: int | None = None,
-        retries: int = 15,
-        meta_updates: dict | None = None,
+        mutate=None,
     ) -> Snapshot:
-        """Optimistic commit with retry. ``files`` may be a CALLABLE that
-        recomputes the manifest against the refreshed current snapshot —
+        """Optimistic snapshot commit: one ``_update_meta`` that appends a
+        snapshot on top of the head as REFRESHED for each attempt. ``files``
+        may be a CALLABLE that recomputes the file list against that head —
         required for correctness under concurrent writers: a retry that
         reused a file list computed against a stale base would silently
         drop the files a racing writer just committed (Iceberg's
-        reapply-on-refreshed-base retry semantics)."""
-        last_err: Exception | None = None
-        for attempt in range(retries):
-            self.refresh()
-            meta = dict(self.meta)
-            v = meta["_version"] + 1
-            parent = meta["current_snapshot_id"]
-            snap_files = files(self.current_snapshot()) if callable(files) else files
+        reapply-on-refreshed-base retry semantics). ``mutate`` edits the
+        same refreshed metadata before the snapshot is built (schema
+        pointer, bucket count, staged entries), so what it derives from
+        the metadata is never stale either."""
+        new_id = 0
+
+        def attempt(meta: dict) -> None:
+            nonlocal new_id
+            head = self.current_snapshot()
+            snap_files = files(head) if callable(files) else files
+            if mutate is not None:
+                mutate(meta)
             # GLOBALLY unique id, not parent+1: branch commits append to
             # the same snapshot list, so a main commit after a branch
-            # commit would otherwise mint the branch's id again (equal in
-            # a linear history, where max(ids) == parent)
-            next_id = (
-                max(x["snapshot_id"] for x in meta["snapshots"]) + 1
-                if meta["snapshots"]
-                else parent + 1
-            )
-            snap = Snapshot(
-                snapshot_id=next_id,
-                parent_id=parent,
-                timestamp_ms=int(time.time() * 1000),
-                operation=operation,
-                files=snap_files,
-                summary=summary,
-                tag=tag,
-                schema_version=(
-                    current_schema_version
-                    if current_schema_version is not None
-                    else meta["current_schema_version"]
-                ),
-            )
-            # v2 persistence: the entry carries a manifest-list path; the
-            # (possibly huge) file list never enters metadata.json
-            snap.manifest_list = self._write_manifests(snap.snapshot_id, snap_files)
-            entry = {k: v for k, v in snap.__dict__.items() if k != "files"}
-            meta = dict(meta)
-            meta["snapshots"] = meta["snapshots"] + [entry]
-            meta["current_snapshot_id"] = snap.snapshot_id
-            if schemas is not None:
-                meta["schemas"] = schemas
-            if current_schema_version is not None:
-                meta["current_schema_version"] = current_schema_version
-            if meta_updates:
-                meta.update(meta_updates)
-            try:
-                self._write_version(v, meta)
-                return snap
-            except CommitConflict as e:  # lost the optimistic race — retry on top
-                last_err = e
-                time.sleep(min(0.05 * (attempt + 1), 0.5) * (0.5 + 0.5 * os.urandom(1)[0] / 255))
-        raise last_err  # type: ignore[misc]
+            # commit would otherwise mint the branch's id again
+            new_id = max(x["snapshot_id"] for x in meta["snapshots"]) + 1
+            meta["snapshots"] = meta["snapshots"] + [
+                self._snapshot_entry(
+                    new_id, head.snapshot_id, operation, snap_files, summary,
+                    tag, meta["current_schema_version"],
+                )
+            ]
+            self._advance_head(meta, new_id)
+
+        self._update_meta(attempt)
+        return self.snapshot(new_id)
+
+    def _advance_head(self, meta: dict, snapshot_id: int) -> None:
+        meta["current_snapshot_id"] = snapshot_id
 
     def _bucket_layout_guard(self, expected_bc: int) -> None:
         """Raise if the bucket layout changed since ``expected_bc`` was
@@ -1379,7 +1339,7 @@ class LakeTable:
         # WINNER's file list so its files are never dropped
         def files_fn(snap: Snapshot) -> list[dict]:
             self._bucket_layout_guard(expected_bc)
-            return snap.files + new_files
+            return list(snap.files) + new_files
 
         return self._commit(
             "append", files_fn, {"appended_files": len(new_files)}, tag=tag
@@ -1435,20 +1395,11 @@ class LakeTable:
             assumed = set(assumed_files)
         else:
             assumed = {
-                f["path"] for f in self.current_snapshot().files_for_buckets(bset)
+                f["path"] for f in self.current_snapshot().files.for_buckets(bset)
             }
 
         def files_fn(snap: Snapshot) -> list[dict]:
-            # re-base on the refreshed snapshot: untouched buckets committed
-            # by a racing writer carry over. But if the racer touched OUR
-            # buckets, this merge's output is stale — abort, don't clobber.
-            current = {f["path"] for f in snap.files_for_buckets(bset)}
-            if current != assumed:
-                raise ConcurrentModification(
-                    f"buckets {sorted(bset)} changed since merge read "
-                    f"({len(assumed)} -> {len(current)} files); re-run the merge"
-                )
-            return [f for f in snap.files if f["bucket"] not in bset] + new_files
+            return _swap_buckets(snap, bset, assumed, new_files, "merge read")
 
         return self._commit("merge", files_fn, s, tag=tag)
 
@@ -1488,12 +1439,11 @@ class LakeTable:
                     )
             return list(target.files)
 
+        def mutate(meta: dict) -> None:
+            meta["current_schema_version"] = target.schema_version
+
         return self._commit(
-            "rollback",
-            files_fn,
-            {"rollback_to": snapshot_id},
-            tag=tag,
-            current_schema_version=target.schema_version,
+            "rollback", files_fn, {"rollback_to": snapshot_id}, tag=tag, mutate=mutate
         )
 
     # ------------------------------------------------------- named refs/tags
@@ -1584,46 +1534,32 @@ class LakeTable:
             raise KeyError(f"no branch {name!r}")
         return BranchView(self.spark, self.path, name)
 
-    def _is_ancestor(self, ancestor_id: int, of_id: int) -> bool:
-        by_id = {s["snapshot_id"]: s for s in self.meta["snapshots"]}
-        cur: int | None = of_id
-        while cur is not None:
-            if cur == ancestor_id:
-                return True
-            entry = by_id.get(cur)
-            cur = entry.get("parent_id") if entry else None
-        return False
-
-    def fast_forward(self, name: str, retries: int = 15) -> int:
+    def fast_forward(self, name: str) -> int:
         """Atomically advance MAIN to branch ``name``'s head. Requires the
         current head to be an ancestor of the branch head (same rule as
         git fast-forward) — a main that moved since the branch forked
         raises ConcurrentModification: rebase by re-running the branch
         work on a fresh branch. Returns the new head id."""
-        last: Exception | None = None
-        for attempt in range(retries):
-            self.refresh()
-            head = self.meta.get("branches", {}).get(name)
+        head = 0
+
+        def mutate(meta: dict) -> bool | None:
+            nonlocal head
+            head = meta.get("branches", {}).get(name)
             if head is None:
                 raise KeyError(f"no branch {name!r}")
-            cur = self.meta["current_snapshot_id"]
+            cur = meta["current_snapshot_id"]
             if head == cur:
-                return head
-            if not self._is_ancestor(cur, head):
+                return False
+            if cur not in self._ancestry_ids(head):
                 raise ConcurrentModification(
                     f"main moved since branch {name!r} forked (head {cur} is "
                     f"not an ancestor of branch head {head}); re-branch and "
                     "replay the work"
                 )
-            meta = dict(self.meta)
             meta["current_snapshot_id"] = head
-            try:
-                self._write_version(meta["_version"] + 1, meta)
-                return head
-            except CommitConflict as e:
-                last = e
-                time.sleep(min(0.05 * (attempt + 1), 0.5))
-        raise last  # type: ignore[misc]
+
+        self._update_meta(mutate)
+        return head
 
     def ref(self, name: str) -> int:
         refs = self.meta.get("refs", {})
@@ -1704,24 +1640,6 @@ class LakeTable:
         return self.spark.createDataFrame(rows, schema)
 
     # -------------------------------------------------- write-audit-publish
-    def _update_meta(self, mutate) -> dict:
-        """Optimistic METADATA-ONLY update (no snapshot added): ``mutate``
-        receives a fresh meta dict copy and edits it in place. Retries on
-        version races like _commit."""
-        last: Exception | None = None
-        for attempt in range(15):
-            self.refresh()
-            meta = dict(self.meta)
-            v = meta["_version"] + 1
-            mutate(meta)
-            try:
-                self._write_version(v, meta)
-                return meta
-            except CommitConflict as e:
-                last = e
-                time.sleep(min(0.05 * (attempt + 1), 0.5))
-        raise last  # type: ignore[misc]
-
     def stage_buckets(
         self,
         touched_buckets: list[int],
@@ -1822,46 +1740,27 @@ class LakeTable:
                 raise ConcurrentModification(
                     f"staged changeset {staged_id!r} was aborted concurrently"
                 )
-            current = {f["path"] for f in snap.files_for_buckets(bset)}
-            if current != assumed:
-                raise ConcurrentModification(
-                    f"buckets {sorted(bset)} changed since staging "
-                    f"({len(assumed)} -> {len(current)} files); re-stage the merge"
-                )
-            return [f for f in snap.files if f["bucket"] not in bset] + new_files
+            return _swap_buckets(snap, bset, assumed, new_files, "staging")
 
-        snap = self._commit(
+        # the entry leaves ``staged`` in the same metadata write that
+        # publishes it, recomputed on each attempt's refreshed list, so
+        # entries staged concurrently by another writer survive
+        return self._commit(
             "merge",
             files_fn,
             {**e["summary"], "published_from": staged_id},
             tag=tag,
+            mutate=_unstage(staged_id),
         )
-        # entry removal is a SEPARATE idempotent metadata update (passing
-        # it through _commit's meta_updates would clobber entries staged
-        # concurrently by another writer, since the removal list would be
-        # computed against a pre-refresh meta). Crash window between the
-        # two writes: the published snapshot's summary carries
-        # published_from, which abort_staged checks before deleting files.
-        def mutate(meta: dict) -> None:
-            meta["staged"] = [
-                x for x in meta.get("staged", []) if x["staged_id"] != staged_id
-            ]
-
-        self._update_meta(mutate)
-        return snap
 
     def abort_staged(self, staged_id: str) -> int:
         """Discard a staged changeset and its files. Returns files removed.
-        If the changeset was already PUBLISHED (a crash between publish's
-        two metadata writes left the entry behind), only the stale entry
-        is removed — the files are live table data."""
+        If the changeset was already PUBLISHED — by a racing publish, or
+        before a crash that left its entry behind (older versions unstaged
+        in a second metadata write) — only the entry is removed: the files
+        are live table data."""
         self.refresh()
         e = self._staged_entry(staged_id)
-
-        def mutate(meta: dict) -> None:
-            meta["staged"] = [
-                x for x in meta.get("staged", []) if x["staged_id"] != staged_id
-            ]
 
         # decide 'published' from the meta version THIS update wrote, not
         # entry-time state: a publish_staged that committed concurrently
@@ -1870,7 +1769,7 @@ class LakeTable:
         # stale handle could delete files the publish made live table
         # data (review-caught). A publish still IN FLIGHT after our
         # removal aborts at its own commit-time pending check above.
-        meta = self._update_meta(mutate)
+        meta = self._update_meta(_unstage(staged_id))
         published = any(
             (s.get("summary") or {}).get("published_from") == staged_id
             for s in meta["snapshots"]
@@ -1942,7 +1841,7 @@ class LakeTable:
             # buckets the new transform never probes (duplicate keys,
             # unsuppressed tombstones).
             self._bucket_layout_guard(expected_bc)
-            return snap.files + new_files
+            return list(snap.files) + new_files
 
         return self._commit("delta", files_fn, s, tag=tag)
 
@@ -1976,7 +1875,7 @@ class LakeTable:
         # ConcurrentModification, not be silently folded away
         df = self.read(snapshot_id=snap0.snapshot_id, buckets=dirty, with_system=True)
         dset = set(dirty)
-        assumed = {f["path"] for f in snap0.files_for_buckets(dset)}
+        assumed = {f["path"] for f in snap0.files.for_buckets(dset)}
         return self.replace_buckets(
             dirty,
             df,
@@ -2020,12 +1919,15 @@ class LakeTable:
                 )
             return new_files
 
+        def mutate(meta: dict) -> None:
+            meta["bucket_count"] = new_bucket_count
+
         return self._commit(
             "rebucket",
             files_fn,
             {"rebucket_from": old, "rebucket_to": new_bucket_count},
             tag=tag,
-            meta_updates={"bucket_count": new_bucket_count},
+            mutate=mutate,
         )
 
     def optimize(
@@ -2078,10 +1980,8 @@ class LakeTable:
         """
         self.refresh()
         cutoff = time.time() - older_than_seconds
-        live: set[str] = set()
-        for entry in self.meta["snapshots"]:
-            for f in self._entry_to_snapshot(entry).files:
-                live.add(os.path.abspath(f["path"]))
+        snaps = self.history()
+        live = {os.path.abspath(f["path"]) for s in snaps for f in s.files}
         # staged (write-audit-publish) changesets are unreferenced by any
         # snapshot until published — their files are pending, not orphaned
         for entry in self.meta.get("staged", []):
@@ -2107,21 +2007,14 @@ class LakeTable:
                     os.rmdir(root)
                 except OSError:
                     pass
-        # manifests: reachable = every kept entry's manifest-list + every
+        # manifests: reachable = every snapshot's manifest-list + every
         # per-bucket manifest those lists reference
         mdir = self._manifest_dir
         if os.path.isdir(mdir):
-            live_ml = {
-                e["manifest_list"]
-                for e in self.meta["snapshots"]
-                if e.get("manifest_list")
-            }
-            live_m: set[str] = set()
-            for ml in live_ml:
-                for ent in self._load_manifest(os.path.join(mdir, ml)):
-                    live_m.add(ent["manifest"])
+            live_m = {s.manifest_list for s in snaps}
+            live_m.update(m["manifest"] for s in snaps for m in s.files.entries)
             for fn in os.listdir(mdir):
-                if fn in live_ml or fn in live_m:
+                if fn in live_m:
                     continue
                 p = os.path.join(mdir, fn)
                 try:
@@ -2138,18 +2031,22 @@ class LakeTable:
         commit. A no-op update (replayed widen/add after a crash between
         schema apply and data commit) returns the current snapshot without
         appending a duplicate schema version — schema application stays
-        idempotent under epoch replay."""
+        idempotent under epoch replay. ``updater`` runs again on the
+        winner's schema whenever the commit loses a race, so a concurrent
+        schema change is evolved from, never overwritten."""
         self.refresh()
-        new_schema = updater(self.table_schema)
-        if new_schema.to_dict() == self.table_schema.to_dict():
+        if updater(self.table_schema).to_dict() == self.table_schema.to_dict():
             return self.current_snapshot()
-        schemas = self.meta["schemas"] + [new_schema.to_dict()]
+
+        def mutate(meta: dict) -> None:
+            cur = self.table_schema.to_dict()
+            new = updater(self.table_schema).to_dict()
+            if new != cur:  # a racer may have made this very change
+                meta["schemas"] = meta["schemas"] + [new]
+                meta["current_schema_version"] = len(meta["schemas"]) - 1
+
         return self._commit(
-            "schema",
-            lambda snap: snap.files,
-            {"schema_change": True},
-            schemas=schemas,
-            current_schema_version=len(schemas) - 1,
+            "schema", lambda snap: snap.files, {"schema_change": True}, mutate=mutate
         )
 
     def add_column(self, name: str, type_name: str) -> Snapshot:
@@ -2216,7 +2113,7 @@ class LakeTable:
             snapshot_id=snap0.snapshot_id, buckets=fragmented, with_system=True
         )
         fset = set(fragmented)
-        assumed = {f["path"] for f in snap0.files_for_buckets(fset)}
+        assumed = {f["path"] for f in snap0.files.for_buckets(fset)}
         summary = {"compacted_buckets": len(fragmented)}
         if zorder_by:
             summary["zorder_by"] = list(zorder_by)
@@ -2288,7 +2185,7 @@ class LakeTable:
             )
         return out
 
-    def expire_snapshots(self, keep_last: int = 10, retries: int = 15) -> int:
+    def expire_snapshots(self, keep_last: int = 10) -> int:
         """Drop old snapshot entries + delete data files no live snapshot references.
 
         Ordering is metadata-FIRST: the pruned metadata commits (with
@@ -2297,12 +2194,14 @@ class LakeTable:
         lost race or a crash between os.remove and the commit leaves
         committed metadata whose retained snapshots reference deleted
         files — time travel and read_changes on them would fail."""
-        last_err: Exception | None = None
-        for attempt in range(retries):
-            self.refresh()
-            snaps = self.meta["snapshots"]
+        kept: list[dict] = []
+        dropped: list[dict] = []
+
+        def mutate(meta: dict) -> bool | None:
+            nonlocal kept, dropped
+            snaps = meta["snapshots"]
             if len(snaps) <= keep_last:
-                return 0
+                return False
             # Retention is LINEAGE-scoped, not list-scoped (review-caught:
             # with branch refs the shared list is a DAG — branch commits
             # at the tail would otherwise evict main's own chain, up to
@@ -2316,10 +2215,10 @@ class LakeTable:
             # expiry keeps working (no manual drop_branch needed).
             main_chain = self._ancestry_ids()  # newest first
             keep_ids = set(main_chain[:keep_last])
-            keep_ids.update(self.meta.get("refs", {}).values())
+            keep_ids.update(meta.get("refs", {}).values())
             by_id = {x["snapshot_id"]: x for x in snaps}
             main_set = set(main_chain)
-            for head in self.meta.get("branches", {}).values():
+            for head in meta.get("branches", {}).values():
                 cur = head
                 while cur is not None and cur in by_id:
                     keep_ids.add(cur)
@@ -2329,76 +2228,67 @@ class LakeTable:
             kept = [x for x in snaps if x["snapshot_id"] in keep_ids]
             dropped = [x for x in snaps if x["snapshot_id"] not in keep_ids]
             if not dropped:
-                return 0
-            meta = dict(self.meta)
+                return False
             meta["snapshots"] = kept
             # commit tags must outlive their snapshots: they are the
             # exactly-once replay guard (a late replay of an expired batch
             # must still no-op). Kept as compact [source_id, batch_id] pairs.
-            expired_tags = list(self.meta.get("expired_tags", []))
+            expired_tags = list(meta.get("expired_tags", []))
+            seen = {tuple(p) for p in expired_tags}
             for s in dropped:
                 tag = s.get("tag")
-                if tag:
-                    pair = [tag["source_id"], tag["batch_id"]]
-                    if pair not in expired_tags:
-                        expired_tags.append(pair)
+                if tag and (tag["source_id"], tag["batch_id"]) not in seen:
+                    seen.add((tag["source_id"], tag["batch_id"]))
+                    expired_tags.append([tag["source_id"], tag["batch_id"]])
             meta["expired_tags"] = expired_tags
-            try:
-                self._write_version(meta["_version"] + 1, meta)
-            except CommitConflict as e:  # racer committed — recompute on top
-                last_err = e
-                time.sleep(min(0.05 * (attempt + 1), 0.5))
+
+        if self._update_meta(mutate) is None:
+            return 0
+        # commit landed: anything referenced only by dropped snapshots
+        # is unreachable (new commits always build on the latest kept
+        # snapshot), so physical deletion is safe now.
+        kept_snaps = [self._entry_to_snapshot(s) for s in kept]
+        dropped_snaps = [self._entry_to_snapshot(s) for s in dropped]
+        live = {f["path"] for s in kept_snaps for f in s.files}
+        removed = 0
+        for s in dropped_snaps:
+            for f in s.files:
+                if f["path"] not in live and os.path.exists(f["path"]):
+                    os.remove(f["path"])
+                    removed += 1
+        # reap metadata files the dropped snapshots owned: their
+        # manifest-lists, plus manifests no kept snapshot references
+        # (content-addressed manifests are shared across snapshots)
+        kept_manifests = {m["manifest"] for s in kept_snaps for m in s.files.entries}
+        for s in dropped_snaps:
+            if not s.manifest_list:  # snapshot 1 of an older version's table
                 continue
-            # commit landed: anything referenced only by dropped snapshots
-            # is unreachable (new commits always build on the latest kept
-            # snapshot), so physical deletion is safe now.
-            kept_snaps = [self._entry_to_snapshot(s) for s in kept]
-            dropped_snaps = [self._entry_to_snapshot(s) for s in dropped]
-            live = {f["path"] for s in kept_snaps for f in s.files}
-            removed = 0
-            for s in dropped_snaps:
-                for f in s.files:
-                    if f["path"] not in live and os.path.exists(f["path"]):
-                        os.remove(f["path"])
-                        removed += 1
-            # reap metadata files the dropped snapshots owned: their
-            # manifest-lists, plus manifests no kept snapshot references
-            # (content-addressed manifests are shared across snapshots)
-            kept_manifests = set()
-            for e in kept:
-                ml = e.get("manifest_list")
-                if ml:
-                    ml_path = os.path.join(self._manifest_dir, ml)
-                    kept_manifests.update(m["manifest"] for m in self._load_manifest(ml_path))
-            for e in dropped:
-                ml = e.get("manifest_list")
-                if not ml:
-                    continue
-                ml_path = os.path.join(self._manifest_dir, ml)
-                if not os.path.exists(ml_path):
-                    continue
-                for m in self._load_manifest(ml_path):
-                    mp = os.path.join(self._manifest_dir, m["manifest"])
-                    if m["manifest"] not in kept_manifests and os.path.exists(mp):
-                        os.remove(mp)
-                        self._manifest_cache.pop(mp, None)
-                os.remove(ml_path)
-                self._manifest_cache.pop(ml_path, None)
-            return removed
-        raise last_err  # type: ignore[misc]
+            ml_path = os.path.join(self._manifest_dir, s.manifest_list)
+            if not os.path.exists(ml_path):
+                continue
+            for m in s.files.entries:
+                mp = os.path.join(self._manifest_dir, m["manifest"])
+                if m["manifest"] not in kept_manifests and os.path.exists(mp):
+                    os.remove(mp)
+                    self._manifest_cache.pop(mp, None)
+            os.remove(ml_path)
+            self._manifest_cache.pop(ml_path, None)
+        return removed
 
 
 class BranchView(LakeTable):
     """Writable handle on a branch ref (``table.branch(name)``).
 
-    Reads resolve from the BRANCH head; commits append a snapshot with
-    the branch head as parent (globally-unique id) and advance ONLY the
+    Overrides only how the head is read (``current_snapshot``) and
+    advanced (``_advance_head``): the base ``_commit`` appends a snapshot
+    with the branch head as parent (globally-unique id) and moves ONLY the
     branch pointer — main's ``current_snapshot_id`` never moves until
     ``fast_forward``. The standard merge/append paths work unchanged
     because every baseline they validate against flows through
     ``current_snapshot()``. Maintenance (compaction, expiry, rebucket,
-    orphan GC) refuses here: retention and layout are main's to manage —
-    a branch-side expiry could drop snapshots main still serves.
+    orphan GC) and schema evolution refuse here: retention, layout and
+    schema are main's to manage — a branch-side expiry could drop
+    snapshots main still serves.
     """
 
     def __init__(self, spark: SparkSession, path: str, branch_name: str):
@@ -2441,60 +2331,11 @@ class BranchView(LakeTable):
     def rollback(self, *a, **kw):
         self._no_maintenance("rollback")
 
-    def _commit(
-        self,
-        operation: str,
-        files,
-        summary: dict,
-        tag: dict | None = None,
-        schemas: list[dict] | None = None,
-        current_schema_version: int | None = None,
-        retries: int = 15,
-        meta_updates: dict | None = None,
-    ) -> Snapshot:
-        """Branch-pointer commit: same optimistic loop as the base
-        ``_commit``, with parent = branch head, a globally-unique
-        snapshot id (main and sibling branches append to the same list),
-        and the branch ref — not ``current_snapshot_id`` — advanced."""
-        if schemas is not None or current_schema_version is not None:
-            raise TypeError(
-                "schema evolution commits on a branch are not supported — "
-                "evolve the schema on main, then re-branch"
-            )
-        last_err: Exception | None = None
-        for attempt in range(retries):
-            self.refresh()
-            meta = dict(self.meta)
-            v = meta["_version"] + 1
-            head = meta.get("branches", {}).get(self.branch_name)
-            if head is None:
-                raise KeyError(f"branch {self.branch_name!r} was dropped")
-            snap_files = files(self.current_snapshot()) if callable(files) else files
-            new_id = max(s["snapshot_id"] for s in meta["snapshots"]) + 1
-            snap = Snapshot(
-                snapshot_id=new_id,
-                parent_id=head,
-                timestamp_ms=int(time.time() * 1000),
-                operation=operation,
-                files=snap_files,
-                summary=summary,
-                tag=tag,
-                schema_version=meta["current_schema_version"],
-            )
-            snap.manifest_list = self._write_manifests(snap.snapshot_id, snap_files)
-            entry = {k: val for k, val in snap.__dict__.items() if k != "files"}
-            meta["snapshots"] = meta["snapshots"] + [entry]
-            branches = dict(meta.get("branches", {}))
-            branches[self.branch_name] = new_id
-            meta["branches"] = branches
-            if meta_updates:
-                meta.update(meta_updates)
-            try:
-                self._write_version(v, meta)
-                return snap
-            except CommitConflict as e:
-                last_err = e
-                time.sleep(
-                    min(0.05 * (attempt + 1), 0.5) * (0.5 + 0.5 * os.urandom(1)[0] / 255)
-                )
-        raise last_err  # type: ignore[misc]
+    def update_schema(self, *a, **kw):
+        raise TypeError(
+            "schema evolution commits on a branch are not supported — "
+            "evolve the schema on main, then re-branch"
+        )
+
+    def _advance_head(self, meta: dict, snapshot_id: int) -> None:
+        meta["branches"] = {**meta.get("branches", {}), self.branch_name: snapshot_id}

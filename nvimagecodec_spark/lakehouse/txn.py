@@ -87,11 +87,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from nvimagecodec_spark.lakehouse.table import (
-    CommitConflict,
-    ConcurrentModification,
-    LakeTable,
-)
+from nvimagecodec_spark.lakehouse.commit import VersionedFileStore
+from nvimagecodec_spark.lakehouse.table import ConcurrentModification, LakeTable
 
 
 class TxnReplayNeeded(RuntimeError):
@@ -111,82 +108,38 @@ def _tag_source(source_id: str, name: str) -> str:
 class TxnCatalog:
     """Single atomically-flipped pointer over N LakeTables.
 
-    State lives in ``path/cat-v{n}.json`` (O_EXCL-created: optimistic CAS,
-    losers retry on a fresh read — the LakeTable metadata pattern) with a
-    ``CURRENT`` hint; intent files live in ``path/txns/``.
+    State lives in ``path/cat-v{n}.json`` with a ``CURRENT`` hint — a
+    ``VersionedFileStore``, the same optimistic protocol as table
+    metadata: every state change is one ``_update_state(mutate)``, and a
+    writer that loses the race re-runs ``mutate`` on the winner's state.
+    Intent files live in ``path/txns/``.
     """
-
-    KEEP_VERSIONS = 50
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
+        self._store = VersionedFileStore(path, "cat-v{}.json", "CURRENT")
         self.state: dict = {}
-        self.refresh()
 
     # ------------------------------------------------------------ storage
-    def _vpath(self, v: int) -> str:
-        return os.path.join(self.path, f"cat-v{v}.json")
-
-    def _hint(self) -> str:
-        return os.path.join(self.path, "CURRENT")
-
     def _txn_dir(self) -> str:
         return os.path.join(self.path, "txns")
 
-    def refresh(self) -> None:
-        with open(self._hint()) as f:
-            v = int(f.read().strip())
-        with open(self._vpath(v)) as f:
-            self.state = json.load(f)
-        self.state["_version"] = v
+    def refresh(self) -> dict:
+        self.state = self._store.read()
+        return self.state
 
     def _write_state(self, v: int, state: dict) -> None:
-        state = {k: val for k, val in state.items() if not k.startswith("_")}
-        vp = self._vpath(v)
-        try:
-            fd = os.open(vp, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError as e:
-            raise CommitConflict(f"catalog version {v} already committed") from e
-        with os.fdopen(fd, "w") as f:
-            json.dump(state, f, indent=1)
-            f.flush()
-            os.fsync(f.fileno())
-        tmp = self._hint() + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(str(v))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._hint())  # atomic flip — the commit point
-        state["_version"] = v
-        self.state = state
-        floor = v - self.KEEP_VERSIONS
-        while floor >= 1:
-            p = self._vpath(floor)
-            if not os.path.exists(p):
-                break
-            try:
-                os.remove(p)
-            except OSError:
-                break
-            floor -= 1
+        self.state = self._store.write(v, state)
 
-    def _update_state(self, mutate) -> dict:
+    def _update_state(self, mutate) -> dict | None:
         """Optimistic CAS update: ``mutate`` edits a fresh copy in place."""
-        last: Exception | None = None
-        for attempt in range(15):
-            self.refresh()
-            state = dict(self.state)
+
+        def on_copy(state: dict):
             state["tables"] = {k: dict(v) for k, v in state["tables"].items()}
-            v = state["_version"] + 1
-            mutate(state)
-            try:
-                self._write_state(v, state)
-                return state
-            except CommitConflict as e:
-                last = e
-                time.sleep(min(0.05 * (attempt + 1), 0.5))
-        raise last  # type: ignore[misc]
+            return mutate(state)
+
+        return self._store.update(on_copy, self.refresh, self._write_state)
 
     # ----------------------------------------------------------- lifecycle
     @classmethod
@@ -207,10 +160,7 @@ class TxnCatalog:
             "txn_log": [],
         }
         state["catalog_id"] = uuid.uuid4().hex[:12]
-        cat = cls.__new__(cls)
-        cat.spark = spark
-        cat.path = path
-        cat.state = {}
+        cat = cls(spark, path)
         cat._write_state(1, state)
         # pins are RETENTION-PROOF from birth: a catalog-owned tag rides
         # every pinned snapshot, so table maintenance (expire_snapshots /
@@ -224,6 +174,7 @@ class TxnCatalog:
         cls, spark: SparkSession, path: str, recover: bool = True
     ) -> "TxnCatalog":
         cat = cls(spark, path)
+        cat.refresh()
         if recover:
             cat.recover()
         return cat

@@ -339,7 +339,7 @@ def merge_into(
 
         if delta_auto_ratio:
             tset = set(touched)
-            tbl_files = table.current_snapshot().files_for_buckets(tset)
+            tbl_files = table.current_snapshot().files.for_buckets(tset)
             rows_known = bool(tbl_files) and all(
                 f.get("rows", -1) >= 0 for f in tbl_files
             )
@@ -362,14 +362,14 @@ def merge_into(
         # baseline capture would be INCLUDED in the baseline and silently
         # swapped out (review-caught lost-update window).
         snap0 = table.current_snapshot()
-        assumed = {f["path"] for f in snap0.files_for_buckets(set(touched))}
+        assumed = {f["path"] for f in snap0.files.for_buckets(set(touched))}
         summary = {"upserts": n_upserts, "deletes": n_deletes}
         small = n_batch <= broadcast_threshold_rows
         # small epochs execute and commit with AQE off (_small_batch_confs)
         confs = _small_batch_confs(table.spark) if small else nullcontext()
         if not assumed:
             # INITIAL-LOAD fast path: every touched bucket is empty (no data
-            # files, no delta layers — files_for_buckets returns both), so
+            # files, no delta layers — files.for_buckets returns both), so
             # all three broadcast joins (or the sort-merge union + second
             # LWW shuffle) reduce algebraically to the batch itself: the
             # resolve branch is empty, no key can match, tombstones land as

@@ -6,8 +6,10 @@ TxnCatalog path. Each writer runs its own JVM and drives full multi-table
 transactions — stage on every catalog table, publish under exactly-once
 tags, atomic pointer flip — so the race covers BOTH optimistic-CAS layers
 at real process concurrency: the per-table O_EXCL snapshot commit
-(publish_staged) and the catalog's O_EXCL cat-v{n}.json flip
-(_update_state). The single-table half of this story is race_writer.py;
+(publish_staged) and the catalog's O_EXCL cat-v{n}.json flip — both run
+the one optimistic loop, VersionedFileStore.update in
+nvimagecodec_spark/lakehouse/commit.py, over their own version files.
+The single-table half of this story is race_writer.py;
 this script is the catalog-pointer half (round-4 verdict item #8).
 
 Writer keys are writer-disjoint but bucket-SHARED, so concurrent publishes

@@ -85,6 +85,32 @@ def test_replace_buckets_detects_stale_merge(spark, tmp_path, monkeypatch):
     assert texts == ["base", "racer"]
 
 
+def test_concurrent_schema_update_is_not_lost(tmp_path, monkeypatch):
+    """A schema commit that loses the race re-derives its schema from the
+    winner's: both added columns survive, as three schema versions, and
+    each schema snapshot points at the version it introduced."""
+    path = str(tmp_path / "t")
+    t = LakeTable.create(None, path, SCHEMA, ["conv_id", "turn_idx"], 1)
+    orig = t._write_version
+    state = {"injected": False}
+
+    def inject_racer(v, meta):
+        if not state["injected"]:
+            state["injected"] = True
+            LakeTable.load(None, path).add_column("x", "string")
+        return orig(v, meta)  # now conflicts -> retry on the racer's schema
+
+    monkeypatch.setattr(t, "_write_version", inject_racer)
+    t.add_column("y", "string")
+    t2 = LakeTable.load(None, path)
+    assert [c.name for c in t2.table_schema.live_columns] == [
+        "conv_id", "turn_idx", "text", "x", "y",
+    ]
+    assert len(t2.meta["schemas"]) == 3
+    schema_snaps = [s for s in t2.history() if s.operation == "schema"]
+    assert [s.schema_version for s in schema_snaps] == [1, 2]
+
+
 def test_racing_delta_appends_all_land(spark, tmp_path):
     """Merge-on-read writers are append-only and conflict-free among
     themselves: N racing delta commits all land (optimistic retries only,

@@ -151,3 +151,17 @@ def test_staged_rejects_tag_and_delta(spark, table):
         merge_into(table, b, staged=True, tag={"source_id": "s", "batch_id": 1})
     with pytest.raises(ValueError, match="copy-on-write"):
         merge_into(table, b, staged=True, delta_auto_ratio=5.0)
+
+
+def test_publish_is_one_metadata_write(spark, table):
+    """Publishing swaps the files in and drops the staged entry in the
+    same metadata version: no window where the table is published but
+    the changeset still looks pending."""
+    r = merge_into(
+        table, _batch(spark, [("a", 0, "U", "ALPHA2")], lsn0=100), staged=True
+    )
+    v0 = table.refresh().meta["_version"]
+    table.publish_staged(r.staged_id)
+    assert table.refresh().meta["_version"] == v0 + 1
+    assert table.staged() == []
+    assert _state(table)[("a", 0)] == "ALPHA2"
