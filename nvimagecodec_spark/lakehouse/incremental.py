@@ -10,6 +10,11 @@ differs between the two snapshots, classified I/U/D, carrying the new row
 image (old image for D) and the winning order key. Downstream consumers
 can chain engines: table A's changelog is a valid source for table B.
 
+``pending_changes(view, source_id, base)`` is the one sync cursor every
+derived table (indexes, views, replicas) folds its base through: the
+view's commit-tag log says where it stopped, and this module decides what
+it has not seen yet.
+
 Scale: the manifest diff first narrows to buckets whose FILE SETS changed
 between the snapshots — copy-on-write commits replace whole bucket file
 sets, so an epoch that touched 3 of 4096 buckets reads exactly those 3
@@ -40,6 +45,79 @@ def last_synced_batch_id(table: LakeTable, source_id: str) -> int | None:
         b for (src, b) in table.meta.get("expired_tags", []) if src == source_id
     ]
     return max(ids) if ids else None
+
+
+def pending_changes(
+    view: LakeTable,
+    source_id: str,
+    base: LakeTable,
+    to_id: int | None = None,
+    with_before: bool = False,
+) -> tuple[int, DataFrame] | None:
+    """What a derived table has not folded in yet: ``(to_id, changes)``
+    with ``read_changes``-shaped rows, or None when ``view`` is already
+    at ``to_id`` (default: the base's head).
+
+    The cursor is ``last_synced_batch_id(view, source_id)`` — the base
+    snapshot id the view last committed under its own exactly-once tag.
+    A first sync diffs from the base's create snapshot (the initial build
+    is just a big first increment); once that snapshot has expired,
+    diffing from the oldest retained one would silently miss every row
+    older than it, so the first sync reads the full live state at
+    ``to_id`` as I events instead. A target older than the cursor, or a
+    cursor the base's retention has already expired, raises ValueError.
+    """
+    to_id = base.current_snapshot().snapshot_id if to_id is None else to_id
+    from_id = last_synced_batch_id(view, source_id)
+    if from_id is None:
+        oldest = base.history()[0]
+        if oldest.operation != "create":
+            return to_id, _live_as_inserts(base, to_id, with_before)
+        from_id = oldest.snapshot_id
+    elif to_id == from_id:
+        return None
+    elif to_id < from_id:
+        raise ValueError(
+            f"sync target snapshot {to_id} is older than last synced {from_id}"
+        )
+    elif all(s.snapshot_id != from_id for s in base.history()):
+        raise ValueError(
+            f"{source_id}: last synced base snapshot {from_id} was expired "
+            "from the base table; syncs must run within the base's snapshot "
+            "retention (recreate the view to rebuild it from full state)"
+        )
+    return to_id, read_changes(base, from_id, to_id, with_before=with_before)
+
+
+def _live_as_inserts(base: LakeTable, to_id: int, with_before: bool) -> DataFrame:
+    """Every live row of snapshot ``to_id`` as an I event, shaped like
+    ``read_changes`` output: read under ``to_id``'s own schema version
+    (a later schema change must not leak in), with typed NULL
+    ``before_<col>`` columns when ``with_before`` is set."""
+    sv, schema = _schema_at(base, to_id)
+    payload = [f for f in schema.fields if f.name not in base.key_cols]
+    live = base.read(snapshot_id=to_id, with_system=True, schema_version=sv).where(
+        ~F.coalesce(F.col("_sys_deleted"), F.lit(False))
+    )
+    before = [
+        F.lit(None).cast(f.dataType).alias(f"before_{f.name}") for f in payload
+    ]
+    return live.select(
+        F.lit("I").alias("op"),
+        *base.key_cols,
+        *[f.name for f in payload],
+        *(before if with_before else []),
+        F.col("_sys_lsn").alias("lsn"),
+        F.col("_sys_cts").alias("commit_ts"),
+    )
+
+
+def _schema_at(table: LakeTable, snapshot_id: int):
+    """(schema version, logical Spark schema) of one snapshot."""
+    from nvimagecodec_spark.lakehouse.schema import TableSchema
+
+    sv = table.snapshot(snapshot_id).schema_version
+    return sv, TableSchema.from_dict(table.meta["schemas"][sv]).to_spark()
 
 
 def changed_buckets(table: LakeTable, from_id: int, to_id: int) -> list[int]:
@@ -103,10 +181,7 @@ def read_changes(
     # different column set and fail the full-outer join (stable field ids
     # let the older snapshot null-fill added columns and surface renamed
     # ones under the new name — Iceberg/Delta CDC-read semantics).
-    to_sv = table.snapshot(to_id).schema_version
-    from nvimagecodec_spark.lakehouse.schema import TableSchema
-
-    to_schema = TableSchema.from_dict(table.meta["schemas"][to_sv]).to_spark()
+    to_sv, to_schema = _schema_at(table, to_id)
     payload_cols = [f.name for f in to_schema.fields if f.name not in key_cols]
 
     def side(snapshot_id: int, tag: str) -> DataFrame:

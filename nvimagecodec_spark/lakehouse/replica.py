@@ -13,7 +13,8 @@ It also supports the two standard narrowing transforms:
   predicate becomes a delete downstream, a row entering becomes an
   insert, and rows that never matched emit nothing at all — the filtered
   replica holds no tombstone shadow of the other 99% of the source.
-``sync()`` folds the source's net row changes since the last sync into a
+``sync()`` folds the source's net row changes since the last sync (the
+shared derived-table cursor, ``incremental.pending_changes``) into a
 sibling LakeTable through the standard order-aware merge, so the replica
 inherits every engine guarantee (atomic commits, tag-cursor idempotence,
 time travel, bucket-pruned writes) — and because it exposes the
@@ -49,7 +50,7 @@ from pyspark.sql import functions as F
 
 from nvimagecodec_spark.lakehouse.incremental import (
     last_synced_batch_id,
-    read_changes,
+    pending_changes,
 )
 from nvimagecodec_spark.lakehouse.table import LakeTable
 from nvimagecodec_spark.operators.merge import MergeResult, merge_into
@@ -210,65 +211,44 @@ class TableReplica:
         self.table._update_meta(mutate)
 
     # ----------------------------------------------------------- sync
-    def last_synced_src_snapshot(self) -> int | None:
+    def last_synced_base_snapshot(self) -> int | None:
         return last_synced_batch_id(self.table, self.SOURCE_ID)
-
-    #: view-protocol alias — TxnCatalog._sync_views duck-types on this name
-    #: to adopt a newer base cursor after an out-of-flip-order concurrent
-    #: commit (the LshBandIndex convention); without it a replica registered
-    #: as a catalog view would raise 'older than last synced' in that race
-    last_synced_base_snapshot = last_synced_src_snapshot
 
     def sync(self, base: LakeTable, to_id: int | None = None) -> MergeResult:
         """Fold source changes since the last sync. Idempotent under the
         (SOURCE_ID, to_id) commit tag; schema evolution is propagated
         first so the data fold lands under the evolved schema."""
-        head = base.current_snapshot().snapshot_id
-        to_id = head if to_id is None else to_id
-        from_id = self.last_synced_src_snapshot()
-        if from_id is not None and to_id == from_id:
-            return MergeResult(None, [], 0, 0, 0.0, "noop")
-        if from_id is not None and to_id < from_id:
-            raise ValueError(
-                f"sync target snapshot {to_id} is older than last synced {from_id}"
-            )
-        self._sync_schema(base)
         # a predicated replica needs before-images: whether a change emits
         # I/U/D/nothing downstream depends on which side(s) of the filter
         # the old and new images fall on
-        with_before = self.row_filter is not None
-        bootstrap = False
-        if from_id is not None:
-            changes = read_changes(base, from_id, to_id, with_before=with_before)
-        else:
-            oldest = base.history()[0]
-            if oldest.operation == "create":
-                changes = read_changes(
-                    base, oldest.snapshot_id, to_id, with_before=with_before
-                )
-            else:
-                changes = self._full_state_changes(base, to_id)
-                bootstrap = True
+        pending = pending_changes(
+            self.table,
+            self.SOURCE_ID,
+            base,
+            to_id,
+            with_before=self.row_filter is not None,
+        )
+        if pending is None:
+            return MergeResult(None, [], 0, 0, 0.0, "noop")
+        to_id, changes = pending
+        self._sync_schema(base)
         if self.row_filter is not None:
-            changes = self._apply_row_filter(changes, bootstrap)
+            changes = self._apply_row_filter(changes)
         return merge_into(
             self.table,
             self._events(changes, to_id),
             tag={"source_id": self.SOURCE_ID, "batch_id": to_id},
         )
 
-    def _apply_row_filter(self, changes: DataFrame, bootstrap: bool) -> DataFrame:
+    def _apply_row_filter(self, changes: DataFrame) -> DataFrame:
         """Predicated replication. Truth table over (old image matched,
         new image matches):  I: emit iff new matches.  U: new matches → U;
         only old matched → D (the row LEFT the slice); neither → nothing.
         D: emit iff old matched. Rows that never matched emit nothing, so
         the replica carries no tombstone shadow of the unmatched corpus.
-        Bootstrap (full live state, no befores): plain filter on I rows.
         NULL filter results count as not-matching (ANSI WHERE semantics).
         """
         keep = F.coalesce(F.expr(self.row_filter), F.lit(False))
-        if bootstrap:
-            return changes.where(keep)
         keys = list(self.table.key_cols)
         payload = [
             c.name
@@ -312,20 +292,6 @@ class TableReplica:
         this replica supports is plain column references (no quoted
         identifiers shadowing payload names)."""
         return _sub_outside_literals(sql, {c: f"__b_{c}" for c in payload})
-
-    def _full_state_changes(self, base: LakeTable, to_id: int) -> DataFrame:
-        df = base.read(snapshot_id=to_id, with_system=True)
-        live = df.where(~F.coalesce(F.col("_sys_deleted"), F.lit(False)))
-        payload = [
-            f.name for f in base.schema().fields if f.name not in base.key_cols
-        ]
-        return live.select(
-            F.lit("I").alias("op"),
-            *base.key_cols,
-            *payload,
-            F.col("_sys_lsn").alias("lsn"),
-            F.col("_sys_cts").alias("commit_ts"),
-        )
 
     def _events(self, changes: DataFrame, to_id: int) -> DataFrame:
         """read_changes output → merge batch (already one net event per

@@ -902,10 +902,6 @@ class LakeTable:
         range_filters: dict | None = None,
         ref: str | None = None,
     ) -> DataFrame:
-        if ref is not None:
-            if snapshot_id is not None:
-                raise ValueError("pass either ref or snapshot_id, not both")
-            snapshot_id = self.ref(ref)
         """Read the table (optionally time-travel / bucket-pruned).
 
         Bucket pruning is manifest-level: only the matching files are ever
@@ -921,6 +917,10 @@ class LakeTable:
         field ids are stable, so older files null-fill added columns and
         surface renamed ones under the new logical name.
         """
+        if ref is not None:
+            if snapshot_id is not None:
+                raise ValueError("pass either ref or snapshot_id, not both")
+            snapshot_id = self.ref(ref)
         snap = self.current_snapshot() if snapshot_id is None else self.snapshot(snapshot_id)
         if schema_version is not None:
             tschema = TableSchema.from_dict(self.meta["schemas"][schema_version])

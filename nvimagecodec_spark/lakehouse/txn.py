@@ -57,11 +57,12 @@ ARE the published files).
 
 **Derived views** (``register_view``): incremental indexes/views
 (IncrementalTextIndex, IncrementalAggView, IncrementalDedupIndex,
-LshBandIndex — anything with ``.table`` and a cursor-idempotent
-``.sync(base, to_id=)``) can be registered against a catalog table (or
-against another view — chains sync in dependency order). After a
-transaction's base publishes succeed, the commit syncs every dependent
-view to the exact published snapshot, then ONE pointer flip pins bases
+LshBandIndex — anything with ``.table``, a cursor-idempotent
+``.sync(base, to_id=)`` and ``.last_synced_base_snapshot()``) can be
+registered against a catalog table (or against another view — chains
+sync in dependency order). After a transaction's base publishes
+succeed, the commit syncs every dependent view to the exact published
+snapshot, then ONE pointer flip pins bases
 and views together — ``catalog.read`` never shows an index lagging the
 base it claims to index. Crash anywhere re-derives: view syncs cursor on
 the view's own commit-tag log, so recovery's roll-forward re-runs them
@@ -219,13 +220,19 @@ class TxnCatalog:
     def register_view(self, name: str, view, base: str) -> None:
         """Register a derived view/index of catalog member ``base`` (a
         table or an already-registered view). ``view`` must expose
-        ``.table`` (a LakeTable) and ``.sync(base_handle, to_id=)`` with a
-        cursor in its own commit-tag log. The view is first synced to the
-        base's PINNED snapshot so the catalog starts consistent; from then
-        on every committed transaction that moves the base re-syncs and
-        re-pins it inside the same pointer flip."""
-        if not hasattr(view, "table") or not hasattr(view, "sync"):
-            raise TypeError("view must expose .table and .sync(base, to_id=)")
+        ``.table`` (a LakeTable), ``.sync(base_handle, to_id=)`` and
+        ``.last_synced_base_snapshot()``, its cursor in its own commit-tag
+        log (``incremental.pending_changes``). The view is first synced to
+        the base's PINNED snapshot so the catalog starts consistent; from
+        then on every committed transaction that moves the base re-syncs
+        and re-pins it inside the same pointer flip."""
+        if not all(
+            hasattr(view, a) for a in ("table", "sync", "last_synced_base_snapshot")
+        ):
+            raise TypeError(
+                "view must expose .table, .sync(base, to_id=) and "
+                ".last_synced_base_snapshot()"
+            )
         views = self.state.get("views", {})
         if name in self.state["tables"] or name in views:
             raise ValueError(f"name {name!r} already in catalog")
@@ -315,8 +322,7 @@ class TxnCatalog:
                     if base in self.state["tables"]
                     else self.view(base)
                 )
-                cursor_fn = getattr(vh, "last_synced_base_snapshot", None)
-                cursor = cursor_fn() if callable(cursor_fn) else None
+                cursor = vh.last_synced_base_snapshot()
                 if cursor is not None and cursor > done[base]:
                     # A concurrent transaction on bucket-DISJOINT keys can
                     # publish after us but commit (sync views + flip)

@@ -23,10 +23,10 @@ as data. A group whose row count returns to zero is deleted, not left
 as a ghost row.
 
 Sync cursor = the view table's commit-tag log (batch_id = base snapshot
-id), identical to IncrementalDedupIndex — replays are no-ops, and a
-view created after the base's create snapshot was expired bootstraps
-from full state instead of silently diffing from the oldest retained
-snapshot.
+id), read through ``incremental.pending_changes`` like every derived
+table: replays are no-ops, and a view created after the base's create
+snapshot was expired bootstraps from full state (I rows with NULL
+before-images, which the retraction arithmetic needs no case for).
 
 Reference analog: incremental status accumulation — per-batch results
 fold into a persistent status vector rather than recomputing all
@@ -41,7 +41,7 @@ from pyspark.sql import types as T
 
 from nvimagecodec_spark.lakehouse.incremental import (
     last_synced_batch_id,
-    read_changes,
+    pending_changes,
 )
 from nvimagecodec_spark.lakehouse.table import LakeTable
 from nvimagecodec_spark.operators.merge import MergeResult, merge_into
@@ -143,27 +143,17 @@ class IncrementalAggView:
 
     def sync(self, base: LakeTable, to_id: int | None = None) -> MergeResult:
         """Fold base changes since the last sync into the view."""
-        head = base.current_snapshot().snapshot_id
-        to_id = head if to_id is None else to_id
-        from_id = self.last_synced_base_snapshot()
-        if from_id is not None:
-            if to_id == from_id:
-                return MergeResult(None, [], 0, 0, 0.0, "noop")
-            if to_id < from_id:
-                raise ValueError(
-                    f"sync target snapshot {to_id} is older than last synced {from_id}"
-                )
-            deltas = self._deltas_from_changes(base, from_id, to_id)
-        else:
-            oldest = base.history()[0]
-            if oldest.operation == "create":
-                deltas = self._deltas_from_changes(base, oldest.snapshot_id, to_id)
-            else:
-                # base create snapshot EXPIRED → full-state bootstrap
-                deltas = self._deltas_from_state(base, to_id)
+        pending = pending_changes(
+            self.table, self.SOURCE_ID, base, to_id, with_before=True
+        )
+        if pending is None:
+            return MergeResult(None, [], 0, 0, 0.0, "noop")
+        to_id, ch = pending
+        plus = self._signed(ch.where(F.col("op") != "D"), "", 1)
+        minus = self._signed(ch.where(F.col("op") != "I"), "before_", -1)
         # cached: the collapsed deltas (one row per touched group) feed
         # both the bucket discovery collect and the totals join
-        deltas = deltas.cache()
+        deltas = self._collapse(plus.unionByName(minus)).cache()
         try:
             batch = self._merge_batch(deltas, to_id, base)
             return merge_into(
@@ -197,17 +187,6 @@ class IncrementalAggView:
         return rows.select(
             *gs, F.lit(sign).cast("long").alias("n_rows"), *ss, *nn, *mm
         )
-
-    def _deltas_from_changes(self, base: LakeTable, from_id: int, to_id: int) -> DataFrame:
-        ch = read_changes(base, from_id, to_id, with_before=True)
-        plus = self._signed(ch.where(F.col("op") != "D"), "", 1)
-        minus = self._signed(ch.where(F.col("op") != "I"), "before_", -1)
-        return self._collapse(plus.unionByName(minus))
-
-    def _deltas_from_state(self, base: LakeTable, to_id: int) -> DataFrame:
-        df = base.read(snapshot_id=to_id, with_system=True)
-        live = df.where(~F.coalesce(F.col("_sys_deleted"), F.lit(False)))
-        return self._collapse(self._signed(live, "", 1))
 
     def _collapse(self, contributions: DataFrame) -> DataFrame:
         aggs = (

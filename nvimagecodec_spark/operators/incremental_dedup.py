@@ -19,7 +19,9 @@ stale replayed sync can never clobber a newer signature), atomic
 snapshot commits, time travel, and EXACTLY-ONCE sync via commit tags
 keyed by the base snapshot id — ``sync()`` is idempotent and crash-safe
 (a re-run of a completed sync is a tagged no-op; a crashed sync left no
-partial commit to heal).
+partial commit to heal). The cursor itself lives in
+``lakehouse/incremental.py`` (``pending_changes``), shared by every
+derived table.
 
 Scale shape per sync: one bucket-pruned changelog scan (read_changes
 prunes to buckets whose file sets changed), one shingle-explode +
@@ -42,7 +44,7 @@ from pyspark.sql import types as T
 from nvimagecodec_spark.functions.hashing import md5_hash32
 from nvimagecodec_spark.lakehouse.incremental import (
     last_synced_batch_id,
-    read_changes,
+    pending_changes,
 )
 from nvimagecodec_spark.lakehouse.table import LakeTable
 from nvimagecodec_spark.operators.dedup import minhash_lsh_pairs
@@ -107,58 +109,21 @@ class IncrementalDedupIndex:
     def sync(self, base: LakeTable, to_id: int | None = None) -> MergeResult:
         """Fold base-table changes since the last sync into the index.
 
-        First sync diffs from the base's CREATE snapshot (every live row
-        arrives as an I event — the initial build is just a big first
-        increment, one code path). Exactly-once: the merge is tagged
-        (SOURCE_ID, to_id); re-syncing an already-folded snapshot is a
-        no-op. LWW order: the base's (lsn, commit_ts) carries over, with
-        the target snapshot id as the tie-breaking offset so a text
-        change that kept its lsn/commit_ts still updates the signature.
+        Cursor, first-sync and replay rules are
+        ``incremental.pending_changes``'s; the merge is tagged
+        (SOURCE_ID, to_id). LWW order: the base's (lsn, commit_ts)
+        carries over, with the target snapshot id as the tie-breaking
+        offset so a text change that kept its lsn/commit_ts still updates
+        the signature.
         """
-        head = base.current_snapshot().snapshot_id
-        to_id = head if to_id is None else to_id
-        from_id = self.last_synced_base_snapshot()
-        if from_id is not None:
-            if to_id == from_id:
-                return MergeResult(None, [], 0, 0, 0.0, "noop")
-            if to_id < from_id:
-                raise ValueError(
-                    f"sync target snapshot {to_id} is older than last synced {from_id}"
-                )
-            changes = read_changes(base, from_id, to_id)
-        else:
-            oldest = base.history()[0]
-            if oldest.operation == "create":
-                # empty create snapshot still retained → the initial build
-                # is just a big first increment (one code path)
-                changes = read_changes(base, oldest.snapshot_id, to_id)
-            else:
-                # the create snapshot was EXPIRED: diffing from the oldest
-                # retained snapshot would silently miss every row older
-                # than it — bootstrap from the full state instead
-                changes = self._full_state_changes(base, to_id)
-        batch = self._signature_batch(changes, to_id)
+        pending = pending_changes(self.table, self.SOURCE_ID, base, to_id)
+        if pending is None:
+            return MergeResult(None, [], 0, 0, 0.0, "noop")
+        to_id, changes = pending
         return merge_into(
             self.table,
-            batch,
+            self._signature_batch(changes, to_id),
             tag={"source_id": self.SOURCE_ID, "batch_id": to_id},
-        )
-
-    def _full_state_changes(self, base: LakeTable, to_id: int) -> DataFrame:
-        """Every live row of snapshot ``to_id`` as an I change event with
-        its stored LWW order (read_changes-shaped)."""
-        df = base.read(snapshot_id=to_id, with_system=True)
-        live = df.where(~F.coalesce(F.col("_sys_deleted"), F.lit(False)))
-        keys = list(self.table.key_cols)
-        payload = [
-            f.name for f in base.schema().fields if f.name not in keys
-        ]
-        return live.select(
-            F.lit("I").alias("op"),
-            *keys,
-            *payload,
-            F.col("_sys_lsn").alias("lsn"),
-            F.col("_sys_cts").alias("commit_ts"),
         )
 
     def _signature_batch(self, changes: DataFrame, to_id: int) -> DataFrame:
@@ -339,47 +304,20 @@ class LshBandIndex:
         )
 
     # ---------------------------------------------------------------- sync
-    def last_synced_sig_snapshot(self) -> int | None:
+    def last_synced_base_snapshot(self) -> int | None:
+        """Highest signature-table snapshot id folded in (the band
+        index's base is the signature table)."""
         return last_synced_batch_id(self.table, self.SOURCE_ID)
-
-    # uniform cursor accessor for catalog view plumbing (the band index's
-    # "base" is the signature table)
-    last_synced_base_snapshot = last_synced_sig_snapshot
 
     def sync(self, sig_index: IncrementalDedupIndex, to_id: int | None = None) -> MergeResult:
         """Fold signature-table changes since the last sync into the band
-        postings. Cursor, bootstrap, and replay rules mirror
-        ``IncrementalDedupIndex.sync`` (tag = sig-table snapshot id)."""
-        sig = sig_index.table
-        head = sig.current_snapshot().snapshot_id
-        to_id = head if to_id is None else to_id
-        from_id = self.last_synced_sig_snapshot()
-        if from_id is not None:
-            if to_id == from_id:
-                return MergeResult(None, [], 0, 0, 0.0, "noop")
-            if to_id < from_id:
-                raise ValueError(
-                    f"sync target snapshot {to_id} is older than last synced {from_id}"
-                )
-            changes = read_changes(sig, from_id, to_id, with_before=True)
-        else:
-            oldest = sig.history()[0]
-            if oldest.operation == "create":
-                changes = read_changes(sig, oldest.snapshot_id, to_id, with_before=True)
-            else:
-                df = sig.read(snapshot_id=to_id, with_system=True)
-                live = df.where(~F.coalesce(F.col("_sys_deleted"), F.lit(False)))
-                payload = [
-                    f.name for f in sig.schema().fields if f.name not in sig.key_cols
-                ]
-                changes = live.select(
-                    F.lit("I").alias("op"),
-                    *sig.key_cols,
-                    *payload,
-                    *[F.lit(None).cast("string").alias(f"before_{c}") for c in payload],
-                    F.col("_sys_lsn").alias("lsn"),
-                    F.col("_sys_cts").alias("commit_ts"),
-                )
+        postings (tag = sig-table snapshot id)."""
+        pending = pending_changes(
+            self.table, self.SOURCE_ID, sig_index.table, to_id, with_before=True
+        )
+        if pending is None:
+            return MergeResult(None, [], 0, 0, 0.0, "noop")
+        to_id, changes = pending
         new_bands = F.when(
             F.col("op") != "D", self._band_array("")
         ).otherwise(F.array().cast("array<struct<band:int,bkey:string>>"))

@@ -36,7 +36,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from nvimagecodec_spark.lakehouse.incremental import last_synced_batch_id
+from nvimagecodec_spark.lakehouse.incremental import (
+    last_synced_batch_id,
+    pending_changes,
+)
 from nvimagecodec_spark.operators.lww import KEY_COLS, ORDER_COLS, _ord_struct
 
 
@@ -173,9 +176,9 @@ class Scd2View:
     This is what makes the write path O(changed rows): closing versions
     in place would need a (key → open version) lookup join per sync.
 
-    Cursor, replay safety, and expired-create bootstrap are identical to
-    IncrementalAggView / IncrementalDedupIndex (commit-tag log keyed by
-    base snapshot id).
+    Cursor, replay safety, and expired-create bootstrap come from
+    ``incremental.pending_changes`` (commit-tag log keyed by base
+    snapshot id), shared with every other derived table.
 
     Reference analog: per-offset parsed-state views over an append-only
     stream — superseded states stay addressable, current state = latest
@@ -243,41 +246,12 @@ class Scd2View:
         """Fold base changes since the last sync into new version rows."""
         from nvimagecodec_spark.operators.merge import MergeResult, merge_into
 
-        head = base.current_snapshot().snapshot_id
-        to_id = head if to_id is None else to_id
-        from_id = self.last_synced_base_snapshot()
-        if from_id is not None:
-            if to_id == from_id:
-                return MergeResult(None, [], 0, 0, 0.0, "noop")
-            if to_id < from_id:
-                raise ValueError(
-                    f"sync target snapshot {to_id} is older than last synced {from_id}"
-                )
-            rows = self._versions_from_changes(base, from_id, to_id)
-        else:
-            oldest = base.history()[0]
-            if oldest.operation == "create":
-                rows = self._versions_from_changes(base, oldest.snapshot_id, to_id)
-            else:
-                # base create snapshot EXPIRED → full-state bootstrap
-                live = base.read(snapshot_id=to_id, with_system=True).where(
-                    ~F.coalesce(F.col("_sys_deleted"), F.lit(False))
-                )
-                rows = live.select(
-                    *self.base_key_cols,
-                    F.lit(self._KIND_VERSION).alias("kind"),
-                    *self.track_cols,
-                )
-        return merge_into(
-            self.table,
-            self._merge_batch(rows, to_id),
-            tag={"source_id": self.SOURCE_ID, "batch_id": to_id},
+        pending = pending_changes(
+            self.table, self.SOURCE_ID, base, to_id, with_before=True
         )
-
-    def _versions_from_changes(self, base, from_id: int, to_id: int) -> DataFrame:
-        from nvimagecodec_spark.lakehouse.incremental import read_changes
-
-        ch = read_changes(base, from_id, to_id, with_before=True)
+        if pending is None:
+            return MergeResult(None, [], 0, 0, 0.0, "noop")
+        to_id, ch = pending
         changed = F.lit(False)
         for c in self.track_cols:
             changed = changed | ~F.col(c).eqNullSafe(F.col(f"before_{c}"))
@@ -292,8 +266,11 @@ class Scd2View:
         tracked = [
             F.when(F.col("op") != "D", F.col(c)).alias(c) for c in self.track_cols
         ]
-        return ch.where(keep).select(
-            *self.base_key_cols, kind.alias("kind"), *tracked
+        rows = ch.where(keep).select(*self.base_key_cols, kind.alias("kind"), *tracked)
+        return merge_into(
+            self.table,
+            self._merge_batch(rows, to_id),
+            tag={"source_id": self.SOURCE_ID, "batch_id": to_id},
         )
 
     def _merge_batch(self, rows: DataFrame, to_id: int) -> DataFrame:

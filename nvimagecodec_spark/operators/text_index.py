@@ -6,20 +6,18 @@ the 100 TB anti-pattern; the answer is a posting-list table — one row
 per (term, doc-key) — maintained INCREMENTALLY from the base table's
 snapshot-diff changelog, so each sync touches only changed documents.
 
-Design (mirrors IncrementalDedupIndex's cursor discipline):
+Design:
 
 - The index IS a LakeTable keyed (term, *base-key) but BUCKETED ON TERM
   ALONE (``bucket_cols=["term"]``): a term lookup reads exactly one
   bucket of the index while the merge still upserts per posting row.
-- ``sync`` diffs the base between the last-synced snapshot (recovered
-  from commit tags — no sidecar state) and the target: before-images
-  give the OLD term set, after-images the NEW; postings emit as
-  I (new ∖ old keeps its LWW idempotence), D (old ∖ new), nothing for
-  unchanged terms. One changed doc costs O(its terms), not O(corpus).
-- Exactly-once: the merge is tagged (source, target snapshot id);
-  re-syncing is a no-op. First sync bootstraps from the full state when
-  the base's create snapshot was expired (same rule as the dedup index:
-  diffing from the oldest RETAINED snapshot would lose older rows).
+- ``sync`` folds the base changes ``incremental.pending_changes`` hands
+  it (the one derived-table cursor: commit-tag log, replay no-op,
+  expired-create bootstrap): before-images give the OLD term set,
+  after-images the NEW; postings emit as I (new ∖ old keeps its LWW
+  idempotence), D (old ∖ new), nothing for unchanged terms. One changed
+  doc costs O(its terms), not O(corpus).
+- Exactly-once: the merge is tagged (source, target snapshot id).
 
 Reference analog: the codec registry's index of which plugin claims
 which format, rebuilt incrementally as plugins register
@@ -34,7 +32,7 @@ from pyspark.sql import types as T
 
 from nvimagecodec_spark.lakehouse.incremental import (
     last_synced_batch_id,
-    read_changes,
+    pending_changes,
 )
 from nvimagecodec_spark.lakehouse.table import LakeTable
 from nvimagecodec_spark.operators.merge import MergeResult, merge_into
@@ -96,39 +94,15 @@ class IncrementalTextIndex:
 
     # --------------------------------------------------------------- sync
     def sync(self, base: LakeTable, to_id: int | None = None) -> MergeResult:
-        head = base.current_snapshot().snapshot_id
-        to_id = head if to_id is None else to_id
-        from_id = self.last_synced_base_snapshot()
-        tcol = self.text_col
-        if from_id is not None:
-            if to_id == from_id:
-                return MergeResult(None, [], 0, 0, 0.0, "noop")
-            if to_id < from_id:
-                raise ValueError(
-                    f"sync target snapshot {to_id} is older than last synced {from_id}"
-                )
-            changes = read_changes(base, from_id, to_id, with_before=True)
-        else:
-            oldest = base.history()[0]
-            if oldest.operation == "create":
-                changes = read_changes(
-                    base, oldest.snapshot_id, to_id, with_before=True
-                )
-            else:
-                df = base.read(snapshot_id=to_id, with_system=True)
-                live = df.where(~F.coalesce(F.col("_sys_deleted"), F.lit(False)))
-                changes = live.select(
-                    F.lit("I").alias("op"),
-                    *self.base_keys,
-                    F.col(tcol),
-                    F.lit(None).cast("string").alias(f"before_{tcol}"),
-                    F.col("_sys_lsn").alias("lsn"),
-                    F.col("_sys_cts").alias("commit_ts"),
-                )
-        batch = self._posting_batch(changes, to_id)
+        pending = pending_changes(
+            self.table, self.SOURCE_ID, base, to_id, with_before=True
+        )
+        if pending is None:
+            return MergeResult(None, [], 0, 0, 0.0, "noop")
+        to_id, changes = pending
         return merge_into(
             self.table,
-            batch,
+            self._posting_batch(changes, to_id),
             tag={"source_id": self.SOURCE_ID, "batch_id": to_id},
         )
 

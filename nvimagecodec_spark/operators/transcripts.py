@@ -141,8 +141,8 @@ class AssembledTranscriptsView:
     the authoritative prior state, so sync cost is O(changed
     conversations) view I/O + O(change batch) compute, independent of
     base size. Exactly-once via commit tags keyed by the base snapshot id
-    (same cursor contract as the other derived views — registrable in a
-    TxnCatalog with ``register_view``).
+    (the cursor is ``incremental.pending_changes``, shared by every
+    derived view — registrable in a TxnCatalog with ``register_view``).
 
     Reference analog: sub-code-stream views re-assembled into the full
     container sample in index order with per-stream state cached across
@@ -252,27 +252,13 @@ class AssembledTranscriptsView:
         array patch + re-derive → one merge. Idempotent under the
         (SOURCE_ID, to_id) commit tag; safe to replay.
         """
-        from nvimagecodec_spark.lakehouse.incremental import read_changes
+        from nvimagecodec_spark.lakehouse.incremental import pending_changes
         from nvimagecodec_spark.operators.merge import MergeResult, merge_into
 
-        head = base.current_snapshot().snapshot_id
-        to_id = head if to_id is None else to_id
-        from_id = self.last_synced_base_snapshot()
-        if from_id is not None:
-            if to_id == from_id:
-                return MergeResult(None, [], 0, 0, 0.0, "noop")
-            if to_id < from_id:
-                raise ValueError(
-                    f"sync target snapshot {to_id} is older than last synced {from_id}"
-                )
-            changes = read_changes(base, from_id, to_id)
-        else:
-            oldest = base.history()[0]
-            if oldest.operation == "create":
-                changes = read_changes(base, oldest.snapshot_id, to_id)
-            else:
-                # create snapshot expired → bootstrap from full live state
-                changes = self._full_state_changes(base, to_id)
+        pending = pending_changes(self.table, self.SOURCE_ID, base, to_id)
+        if pending is None:
+            return MergeResult(None, [], 0, 0, 0.0, "noop")
+        to_id, changes = pending
         batch, cached = self._patched_batch(
             changes, self._resolve_line_cols(base), to_id, persist_patches
         )
@@ -285,17 +271,6 @@ class AssembledTranscriptsView:
         finally:
             if cached is not None:
                 cached.unpersist()
-
-    def _full_state_changes(self, base, to_id: int) -> DataFrame:
-        df = base.read(snapshot_id=to_id, with_system=True)
-        live = df.where(~F.coalesce(F.col("_sys_deleted"), F.lit(False)))
-        cols = [self.conv_col, self.turn_col] + self._resolve_line_cols(base)
-        return live.select(
-            F.lit("I").alias("op"),
-            *cols,
-            F.col("_sys_lsn").alias("lsn"),
-            F.col("_sys_cts").alias("commit_ts"),
-        )
 
     def _resolve_line_cols(self, base) -> list[str]:
         """Stored line-col names mapped through base schema evolution: a

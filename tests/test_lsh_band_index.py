@@ -159,3 +159,25 @@ def test_shingleless_doc_has_no_bands(spark, stack):
     band.sync(sig)
     pairs = _pairset(band.pairs())
     assert not any("tiny" in a or "tiny" in b for (a, b, _) in pairs)
+
+
+def test_bootstrap_after_sig_create_snapshot_expired(spark, stack, tmp_dir):
+    """A band index created after the signature table's create snapshot
+    was expired bootstraps from the signature table's full live state —
+    diffing from the oldest retained sig snapshot would lose every
+    signature written before it."""
+    base, sig, _ = stack
+    merge_into(base, _batch(spark, [("c9", 0, "U", _texts(0))], lsn0=100))
+    sig.sync(base)
+    sig.table.expire_snapshots(keep_last=1)
+    assert sig.table.history()[0].operation != "create"
+    band = LshBandIndex.create(
+        spark, os.path.join(tmp_dir, "band2"), sig, rows_per_band=2, bucket_count=16
+    )
+    band.sync(sig)
+    assert band.last_synced_base_snapshot() == sig.table.current_snapshot().snapshot_id
+    got = _pairset(band.pairs())
+    assert got == _pairset(sig.pairs(rows_per_band=2))
+    # the pre-expiry signatures are indexed, c9's new dup pairs included
+    assert ("c0|0", "c3|0", band.bands) in got
+    assert ("c0|0", "c9|0", band.bands) in got

@@ -338,11 +338,12 @@ def test_replica_view_synced_past_target_adopts_newer_state(
     spark, tmp_dir, monkeypatch
 ):
     """The out-of-flip-order adoption must work for EVERY registered view
-    type: TableReplica exposes its cursor under last_synced_src_snapshot,
-    and the view-protocol alias last_synced_base_snapshot is what
-    _sync_views duck-types on — without the alias this exact scenario
-    raised 'older than last synced' AFTER txn1's bases published, wedging
-    the catalog (review-caught regression of the chaos-soak race fix)."""
+    type: _sync_views reads each view's last_synced_base_snapshot(), the
+    one cursor name every view exposes (register_view rejects a view
+    without it) — when TableReplica named its cursor differently, this
+    exact scenario raised 'older than last synced' AFTER txn1's bases
+    published, wedging the catalog (regression of the chaos-soak race
+    fix)."""
     from nvimagecodec_spark.lakehouse.replica import TableReplica
 
     docs = LakeTable.create(
