@@ -17,7 +17,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -57,6 +57,13 @@ def spark_type_from_name(name: str) -> T.DataType:
     if name in _NAME_TO_TYPE:
         return _NAME_TO_TYPE[name]
     return T._parse_datatype_string(name)
+
+
+def _cast(col: Column, have: T.DataType | None, want: T.DataType) -> Column:
+    """``col`` as ``want``. A cast costs JVM round trips per column every
+    time a plan is built, so it is skipped where the input already has
+    the type (Spark drops such a cast from the optimized plan anyway)."""
+    return col if have == want else col.cast(want)
 
 
 @dataclass
@@ -124,11 +131,14 @@ class TableSchema:
         )
 
     def project_physical_to_logical(self, df: DataFrame, extra_cols: Iterable[str] = ()) -> DataFrame:
+        have = {f.name: f.dataType for f in df.schema.fields}
         exprs = [
-            F.col(c.physical_name).cast(c.logical_type()).alias(c.name)
+            _cast(F.col(c.physical_name), have.get(c.physical_name), c.logical_type()).alias(
+                c.name
+            )
             for c in self.live_columns
         ]
-        exprs += [F.col(x) for x in extra_cols if x in df.columns]
+        exprs += [F.col(x) for x in extra_cols if x in have]
         return df.select(*exprs)
 
     def project_logical_to_physical(self, df: DataFrame, extra_cols: Iterable[str] = ()) -> DataFrame:
@@ -137,13 +147,15 @@ class TableSchema:
         New files are written with physical names but the *logical* type
         (newer files may hold wider values); reads cast back up so mixed
         files coexist."""
+        have = {f.name: f.dataType for f in df.schema.fields}
         exprs = []
         for c in self.live_columns:
-            if c.name in df.columns:
-                exprs.append(F.col(c.name).cast(c.logical_type()).alias(c.physical_name))
+            if c.name in have:
+                col = _cast(F.col(c.name), have[c.name], c.logical_type())
             else:
-                exprs.append(F.lit(None).cast(c.logical_type()).alias(c.physical_name))
-        exprs += [F.col(x) for x in extra_cols if x in df.columns]
+                col = F.lit(None).cast(c.logical_type())
+            exprs.append(col.alias(c.physical_name))
+        exprs += [F.col(x) for x in extra_cols if x in have]
         return df.select(*exprs)
 
     def to_dict(self) -> dict:
