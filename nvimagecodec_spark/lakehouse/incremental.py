@@ -23,6 +23,8 @@ from each snapshot. The join is bucket-aligned by construction.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -95,7 +97,7 @@ def _live_as_inserts(base: LakeTable, to_id: int, with_before: bool) -> DataFram
     (a later schema change must not leak in), with typed NULL
     ``before_<col>`` columns when ``with_before`` is set."""
     sv, schema = _schema_at(base, to_id)
-    payload = [f for f in schema.fields if f.name not in base.key_cols]
+    payload = [f for f in schema.to_spark().fields if f.name not in base.key_cols]
     live = base.read(snapshot_id=to_id, with_system=True, schema_version=sv).where(
         ~F.coalesce(F.col("_sys_deleted"), F.lit(False))
     )
@@ -113,11 +115,55 @@ def _live_as_inserts(base: LakeTable, to_id: int, with_before: bool) -> DataFram
 
 
 def _schema_at(table: LakeTable, snapshot_id: int):
-    """(schema version, logical Spark schema) of one snapshot."""
+    """(schema version, ``TableSchema``) of one snapshot."""
     from nvimagecodec_spark.lakehouse.schema import TableSchema
 
     sv = table.snapshot(snapshot_id).schema_version
-    return sv, TableSchema.from_dict(table.meta["schemas"][sv]).to_spark()
+    return sv, TableSchema.from_dict(table.meta["schemas"][sv])
+
+
+BASE_FIELD_IDS = "view.base-field-ids"
+
+
+def base_field_ids(base: LakeTable, names: list[str]) -> dict:
+    """The property a derived table records at create: each base column
+    it names → that column's field id in the base's current schema (a
+    JSON string, like every other table property value)."""
+    ids = {c.name: c.field_id for c in base.table_schema.live_columns}
+    return {BASE_FIELD_IDS: json.dumps({n: ids[n] for n in names})}
+
+
+def resolve_columns(
+    base: LakeTable, view: LakeTable, names: list[str], to_id: int
+) -> list[str]:
+    """Base column names a derived table stored at create time → the same
+    columns' names in snapshot ``to_id``'s schema, which is the schema
+    ``pending_changes`` rows are read under. Each name maps to the field
+    id ``view`` recorded at create (``base_field_ids``), so a rename on
+    either side of ``to_id`` keeps resolving and a later column that
+    re-uses the name is never picked up. A column dropped since (or absent
+    at ``to_id``) raises ValueError rather than leaving a hole in every
+    later row. A view created before field ids were recorded maps its
+    names through the base's current names, then their ``prev_names``."""
+    recorded = view.meta.get("properties", {}).get(BASE_FIELD_IDS)
+    if recorded is not None:
+        ids = json.loads(recorded)
+    else:
+        live = base.table_schema.live_columns
+        ids = {c.name: c.field_id for c in live}
+        for c in live:
+            for p in c.prev_names:
+                ids.setdefault(p, c.field_id)
+    at = {c.field_id: c.name for c in _schema_at(base, to_id)[1].live_columns}
+    out = []
+    for name in names:
+        if ids.get(name) not in at:
+            raise ValueError(
+                f"base column {name!r} no longer exists (dropped?) or is absent "
+                f"at snapshot {to_id}; recreate the view with current columns"
+            )
+        out.append(at[ids[name]])
+    return out
 
 
 def changed_buckets(table: LakeTable, from_id: int, to_id: int) -> list[int]:
@@ -182,7 +228,7 @@ def read_changes(
     # let the older snapshot null-fill added columns and surface renamed
     # ones under the new name — Iceberg/Delta CDC-read semantics).
     to_sv, to_schema = _schema_at(table, to_id)
-    payload_cols = [f.name for f in to_schema.fields if f.name not in key_cols]
+    payload_cols = [c.name for c in to_schema.live_columns if c.name not in key_cols]
 
     def side(snapshot_id: int, tag: str) -> DataFrame:
         df = table.read(

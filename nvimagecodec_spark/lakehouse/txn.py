@@ -67,9 +67,11 @@ and views together — ``catalog.read`` never shows an index lagging the
 base it claims to index. Crash anywhere re-derives: view syncs cursor on
 the view's own commit-tag log, so recovery's roll-forward re-runs them
 as no-ops or completions. A view's pin only moves when its base moved.
-Contract: don't ``sync()`` a registered view out-of-band — a manual sync
-past the txn's target raises at commit time instead of silently pinning
-a view that is AHEAD of its base.
+Contract: don't ``sync()`` a registered view out-of-band. A view whose
+cursor is already past the txn's target (a manual sync, or a concurrent
+txn that committed first) does not raise: the commit adopts that newer
+base snapshot as the pin for both base and view, so the pair stays
+mutually consistent.
 
 Reference analog: results become visible only after the explicit
 cross-stream synchronize-and-publish barrier

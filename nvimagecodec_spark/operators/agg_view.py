@@ -40,8 +40,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from nvimagecodec_spark.lakehouse.incremental import (
+    base_field_ids,
     last_synced_batch_id,
     pending_changes,
+    resolve_columns,
 )
 from nvimagecodec_spark.lakehouse.table import LakeTable
 from nvimagecodec_spark.operators.merge import MergeResult, merge_into
@@ -133,6 +135,9 @@ class IncrementalAggView:
                 "aggview.sum-cols": ",".join(sum_cols),
                 "aggview.min-cols": ",".join(min_cols),
                 "aggview.max-cols": ",".join(max_cols),
+                **base_field_ids(
+                    base, list(dict.fromkeys(group_cols + sum_cols + min_cols + max_cols))
+                ),
             },
         )
         return cls(spark, path)
@@ -149,13 +154,16 @@ class IncrementalAggView:
         if pending is None:
             return MergeResult(None, [], 0, 0, 0.0, "noop")
         to_id, ch = pending
-        plus = self._signed(ch.where(F.col("op") != "D"), "", 1)
-        minus = self._signed(ch.where(F.col("op") != "I"), "before_", -1)
+        # view column name → the base column's name at to_id
+        cols = list(dict.fromkeys(self.group_cols + self.sum_cols + self._mm_cols))
+        names = dict(zip(cols, resolve_columns(base, self.table, cols, to_id)))
+        plus = self._signed(ch.where(F.col("op") != "D"), "", 1, names)
+        minus = self._signed(ch.where(F.col("op") != "I"), "before_", -1, names)
         # cached: the collapsed deltas (one row per touched group) feed
         # both the bucket discovery collect and the totals join
         deltas = self._collapse(plus.unionByName(minus)).cache()
         try:
-            batch = self._merge_batch(deltas, to_id, base)
+            batch = self._merge_batch(deltas, to_id, base, names)
             return merge_into(
                 self.table,
                 batch,
@@ -164,7 +172,9 @@ class IncrementalAggView:
         finally:
             deltas.unpersist()
 
-    def _signed(self, rows: DataFrame, prefix: str, sign: int) -> DataFrame:
+    def _signed(
+        self, rows: DataFrame, prefix: str, sign: int, names: dict[str, str]
+    ) -> DataFrame:
         """One signed contribution per change row: group key from the
         ``prefix`` image, ±1 row count, ± each sum column. A group/sum
         column that is a base KEY col has no ``before_`` copy (keys
@@ -172,6 +182,7 @@ class IncrementalAggView:
         cols = set(rows.columns)
 
         def img(c: str) -> F.Column:
+            c = names[c]
             return F.col(f"{prefix}{c}" if f"{prefix}{c}" in cols else c)
 
         gs = [img(g).alias(g) for g in self.group_cols]
@@ -212,7 +223,9 @@ class IncrementalAggView:
                 aggs.append(F.max(F.when(~ins, v)).alias(f"_ret_max_{c}"))
         return contributions.groupBy(*self.group_cols).agg(*aggs)
 
-    def _merge_batch(self, deltas: DataFrame, to_id: int, base: LakeTable) -> DataFrame:
+    def _merge_batch(
+        self, deltas: DataFrame, to_id: int, base: LakeTable, names: dict[str, str]
+    ) -> DataFrame:
         """deltas + current totals of the TOUCHED buckets → change rows."""
         # The delta side is one row per touched GROUP — bounded by the
         # epoch's distinct groups, and the bucket list by bucket_count.
@@ -308,14 +321,14 @@ class IncrementalAggView:
             live = live.where(~F.coalesce(F.col("_sys_deleted"), F.lit(False)))
             ccond = None
             for g in self.group_cols:
-                c = live[g].eqNullSafe(rc_groups[g])
+                c = live[names[g]].eqNullSafe(rc_groups[g])
                 ccond = c if ccond is None else (ccond & c)
             rc = (
                 live.join(F.broadcast(rc_groups), ccond)
                 .groupBy(*[rc_groups[g].alias(g) for g in self.group_cols])
                 .agg(
-                    *[F.min(live[c]).alias(f"_rc_min_{c}") for c in self.min_cols],
-                    *[F.max(live[c]).alias(f"_rc_max_{c}") for c in self.max_cols],
+                    *[F.min(live[names[c]]).alias(f"_rc_min_{c}") for c in self.min_cols],
+                    *[F.max(live[names[c]]).alias(f"_rc_max_{c}") for c in self.max_cols],
                 )
             )
             jcond = None

@@ -43,8 +43,10 @@ from pyspark.sql import types as T
 
 from nvimagecodec_spark.functions.hashing import md5_hash32
 from nvimagecodec_spark.lakehouse.incremental import (
+    base_field_ids,
     last_synced_batch_id,
     pending_changes,
+    resolve_columns,
 )
 from nvimagecodec_spark.lakehouse.table import LakeTable
 from nvimagecodec_spark.operators.dedup import minhash_lsh_pairs
@@ -96,6 +98,7 @@ class IncrementalDedupIndex:
                 "dedup.n-hashes": str(n_hashes),
                 "dedup.shingle-n": str(shingle_n),
                 "dedup.text-col": text_col,
+                **base_field_ids(base, [text_col]),
             },
         )
         return cls(spark, path)
@@ -120,20 +123,22 @@ class IncrementalDedupIndex:
         if pending is None:
             return MergeResult(None, [], 0, 0, 0.0, "noop")
         to_id, changes = pending
+        (text_col,) = resolve_columns(base, self.table, [self.text_col], to_id)
         return merge_into(
             self.table,
-            self._signature_batch(changes, to_id),
+            self._signature_batch(changes, text_col, to_id),
             tag={"source_id": self.SOURCE_ID, "batch_id": to_id},
         )
 
-    def _signature_batch(self, changes: DataFrame, to_id: int) -> DataFrame:
+    def _signature_batch(self, changes: DataFrame, text_col: str, to_id: int) -> DataFrame:
         """Changed keys → signature change events (merge_into contract:
-        keys + op + after-JSON + the four order columns)."""
+        keys + op + after-JSON + the four order columns); ``text_col`` is
+        the text column's name in ``changes``."""
         keys = list(self.table.key_cols)
         n = self.shingle_n
 
         live = changes.where(F.col("op") != "D")
-        toks = F.split(F.trim(F.lower(F.col(self.text_col))), r"\s+")
+        toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
         sh_expr = F.expr(
             f"transform(sequence(0, size(_toks) - {n}), "
             f"i -> concat_ws(' ', slice(_toks, i + 1, {n})))"

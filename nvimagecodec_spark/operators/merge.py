@@ -35,6 +35,7 @@ import threading
 import time
 from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -234,12 +235,82 @@ def _small_batch_confs(spark):
             conf.set("spark.sql.adaptive.enabled", original)
 
 
+class _Prepared(NamedTuple):  # a batch ready to land + its one stats collect
+    rows: DataFrame
+    cols: list[str]
+    upserts: int
+    deletes: int
+    touched: list[int]  # sorted
+    bucketed_under: int  # the bucket count BUCKET_COL was computed under
+
+    @property
+    def summary(self) -> dict:
+        return {"upserts": self.upserts, "deletes": self.deletes}
+
+
+@contextmanager
+def _prepared_batch(table: LakeTable, deduped: DataFrame, batch_transform):
+    """Winning change events → the persisted, bucketed batch every apply
+    path lands; unpersisted on exit."""
+    from pyspark import StorageLevel
+
+    data_cols = [f.name for f in table.schema().fields]  # includes keys
+    cols = data_cols + _SYS_ORDER + ["_sys_deleted", "_sys_raw", BUCKET_COL]
+    bucketed_under = table.bucket_count  # layout with_bucket uses just below
+    rows = _batch_to_rows(table, deduped)
+    if batch_transform is not None:
+        rows = _apply_batch_transform(rows, batch_transform)
+    # The batch drives bucket discovery AND the join/union (or delta-file
+    # write) side — persist so the raw stream isn't re-read per use; without
+    # it the whole upstream scan+parse+dedupe recomputes per use. DISK_ONLY,
+    # deliberately: the batch carries full after-images; caching it
+    # deserialized in-heap at high thread counts caused measurable GC stalls
+    # (32-thread local run), while a serialized spill is written once and
+    # streamed back twice.
+    # Without this flag AQE cannot change a cached plan's output
+    # partitioning: the DISK_ONLY batch stays pinned at
+    # spark.sql.shuffle.partitions partitions and every consumer (stats
+    # job, merge join, writer) pays that task count even for a 100-row
+    # epoch. Runtime-settable session conf (same precedent as the
+    # outputTimestampType set in _write_data_files).
+    table.spark.conf.set(
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
+    )
+    batch = table.with_bucket(rows).persist(StorageLevel.DISK_ONLY)
+    try:
+        # ONE driver round-trip yields bucket discovery AND batch stats
+        # (per-epoch floor matters for steady-state CDC throughput).
+        stats = (
+            batch.groupBy(BUCKET_COL)
+            .agg(
+                F.sum(F.when(~F.col("_sys_deleted"), 1).otherwise(0)).alias("u"),
+                F.sum(F.when(F.col("_sys_deleted"), 1).otherwise(0)).alias("d"),
+            )
+            .collect()
+        )
+        n_upserts = sum(int(r["u"] or 0) for r in stats)
+        n_deletes = sum(int(r["d"] or 0) for r in stats)
+        touched = sorted(r[BUCKET_COL] for r in stats)
+        yield _Prepared(batch, cols, n_upserts, n_deletes, touched, bucketed_under)
+    finally:
+        batch.unpersist()
+
+
+def _append_deltas(table: LakeTable, b: _Prepared, tag: dict | None) -> Snapshot:
+    return table.append_deltas(
+        b.rows.select(*b.cols),
+        tag=tag,
+        summary=b.summary,
+        bucketed_under=b.bucketed_under,
+        touched_buckets=b.touched,
+    )
+
+
 def merge_into(
     table: LakeTable,
     deduped: DataFrame,
     tag: dict | None = None,
     broadcast_threshold_rows: int = 100_000,
-    batch_counts: tuple[int, int] | None = None,
     delta_auto_ratio: float | None = None,
     batch_transform=None,
     staged: bool = False,
@@ -289,72 +360,23 @@ def merge_into(
         if prop is not None:
             delta_auto_ratio = float(prop)
 
-    key_cols = table.key_cols
-    data_cols = [f.name for f in table.schema().fields]  # includes keys
-    payload_cols = [c for c in data_cols if c not in key_cols]
-    all_cols = data_cols + _SYS_ORDER + ["_sys_deleted", "_sys_raw", BUCKET_COL]
-
-    bucketed_under = table.bucket_count  # layout with_bucket uses just below
-    rows = _batch_to_rows(table, deduped)
-    if batch_transform is not None:
-        rows = _apply_batch_transform(rows, batch_transform)
-    batch = table.with_bucket(rows)
-    # The batch drives bucket discovery AND the join/union side — persist so
-    # the raw stream isn't re-read per use. DISK_ONLY, deliberately: the
-    # batch carries full after-images; caching it deserialized in-heap at
-    # high thread counts caused measurable GC stalls (32-thread local run),
-    # while a serialized spill is written once and streamed back twice.
-    from pyspark import StorageLevel
-
-    # Without this flag AQE cannot change a cached plan's output
-    # partitioning: the DISK_ONLY batch stays pinned at
-    # spark.sql.shuffle.partitions partitions and every consumer (stats
-    # job, merge join, writer) pays that task count even for a 100-row
-    # epoch. Runtime-settable session conf (same precedent as the
-    # outputTimestampType set in _write_data_files).
-    table.spark.conf.set(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
-    )
-    batch = batch.persist(StorageLevel.DISK_ONLY)
-    try:
-        # ONE driver round-trip yields bucket discovery AND batch stats
-        # (per-epoch floor matters for steady-state CDC throughput).
-        stats = (
-            batch.groupBy(BUCKET_COL)
-            .agg(
-                F.sum(F.when(~F.col("_sys_deleted"), 1).otherwise(0)).alias("u"),
-                F.sum(F.when(F.col("_sys_deleted"), 1).otherwise(0)).alias("d"),
-            )
-            .collect()
-        )
-        if batch_counts is not None:
-            n_upserts, n_deletes = batch_counts
-        else:
-            n_upserts = sum(int(r["u"] or 0) for r in stats)
-            n_deletes = sum(int(r["d"] or 0) for r in stats)
-        n_batch = n_upserts + n_deletes
-        touched = [r[BUCKET_COL] for r in stats]
+    with _prepared_batch(table, deduped, batch_transform) as b:
+        touched = b.touched
         if not touched:
             return MergeResult(None, [], 0, 0, time.time() - t0, "noop")
 
+        def result(snap, strategy, staged_id=None) -> MergeResult:
+            dt = time.time() - t0
+            return MergeResult(snap, touched, b.upserts, b.deletes, dt, strategy, staged_id)
+
+        n_batch = b.upserts + b.deletes
         if delta_auto_ratio:
-            tset = set(touched)
-            tbl_files = table.current_snapshot().files.for_buckets(tset)
+            tbl_files = table.current_snapshot().files.for_buckets(set(touched))
             rows_known = bool(tbl_files) and all(
                 f.get("rows", -1) >= 0 for f in tbl_files
             )
             if rows_known and sum(f["rows"] for f in tbl_files) > delta_auto_ratio * n_batch:
-                snap = table.append_deltas(
-                    batch.select(*all_cols),
-                    tag=tag,
-                    summary={"upserts": n_upserts, "deletes": n_deletes},
-                    bucketed_under=bucketed_under,
-                    touched_buckets=sorted(tset),
-                )
-                return MergeResult(
-                    snap, sorted(touched), n_upserts, n_deletes,
-                    time.time() - t0, "delta-append",
-                )
+                return result(_append_deltas(table, b, tag), "delta-append")
 
         # Pin the scan AND the commit-validation base to ONE snapshot:
         # table.read() resolves its file list at call time, so a racer
@@ -363,7 +385,18 @@ def merge_into(
         # swapped out (review-caught lost-update window).
         snap0 = table.current_snapshot()
         assumed = {f["path"] for f in snap0.files.for_buckets(set(touched))}
-        summary = {"upserts": n_upserts, "deletes": n_deletes}
+
+        def land(merged: DataFrame, strategy: str) -> MergeResult:
+            if staged:
+                sid = table.stage_buckets(
+                    touched, merged, assumed_files=assumed, summary=b.summary
+                )
+                return result(None, f"staged-{strategy}", staged_id=sid)
+            snap = table.replace_buckets(
+                touched, merged, tag=tag, summary=b.summary, assumed_files=assumed
+            )
+            return result(snap, strategy)
+
         small = n_batch <= broadcast_threshold_rows
         # small epochs execute and commit with AQE off (_small_batch_confs)
         confs = _small_batch_confs(table.spark) if small else nullcontext()
@@ -384,24 +417,7 @@ def merge_into(
             # validate assumed_files == ∅ at commit, so a concurrent first
             # writer aborts exactly as before.
             with confs:
-                merged = batch.select(*all_cols)
-                if staged:
-                    sid = table.stage_buckets(
-                        sorted(touched), merged, assumed_files=assumed,
-                        summary=summary,
-                    )
-                    return MergeResult(
-                        None, sorted(touched), n_upserts, n_deletes,
-                        time.time() - t0, "staged-initial-load", staged_id=sid,
-                    )
-                snap = table.replace_buckets(
-                    sorted(touched), merged, tag=tag, summary=summary,
-                    assumed_files=assumed,
-                )
-                return MergeResult(
-                    snap, sorted(touched), n_upserts, n_deletes,
-                    time.time() - t0, "initial-load",
-                )
+                return land(b.rows.select(*b.cols), "initial-load")
         current = table.read(
             snapshot_id=snap0.snapshot_id, buckets=touched, with_system=True
         )
@@ -423,23 +439,7 @@ def merge_into(
             last_err: Exception | None = None
             for strategy, impl in chain:
                 try:
-                    merged = impl(current, batch, key_cols, all_cols)
-                    if staged:
-                        sid = table.stage_buckets(
-                            sorted(touched), merged, assumed_files=assumed,
-                            summary=summary,
-                        )
-                        return MergeResult(
-                            None, sorted(touched), n_upserts, n_deletes,
-                            time.time() - t0, f"staged-{strategy}", staged_id=sid,
-                        )
-                    snap = table.replace_buckets(
-                        sorted(touched), merged, tag=tag, summary=summary,
-                        assumed_files=assumed,
-                    )
-                    return MergeResult(
-                        snap, sorted(touched), n_upserts, n_deletes, time.time() - t0, strategy
-                    )
+                    return land(impl(current, b.rows, table.key_cols, b.cols), strategy)
                 except (ConcurrentModification, CommitConflict):
                     # NOT an execution failure — a racing writer committed after
                     # our scan. Falling through to the next strategy would merge
@@ -453,8 +453,6 @@ def merge_into(
                     if strategy == chain[-1][0]:
                         raise
             raise last_err  # pragma: no cover — loop always returns or raises
-    finally:
-        batch.unpersist()
 
 
 def _merge_broadcast(
@@ -523,7 +521,6 @@ def merge_into_delta(
     table: LakeTable,
     deduped: DataFrame,
     tag: dict | None = None,
-    compact_max_delta_files: int | None = None,
     batch_transform=None,
 ) -> MergeResult:
     """Merge-on-read apply: identical input contract and exactly-once
@@ -539,60 +536,13 @@ def merge_into_delta(
     with the same order comparator (LakeTable.read), so correctness —
     cross-epoch LWW, tombstones, no-resurrection — is shared, not
     re-implemented. Hudi MOR / Iceberg merge-on-read rebuilt Spark-first.
-
-    ``compact_max_delta_files``: if set, buckets that now hold more than
-    this many delta layers are folded back into base files in a SECOND
-    atomic commit (bucket-granular; read amplification stays bounded).
-    The reference analog is the staged device buffer that absorbs small
-    writes and flushes when full (batched sink reserve/flush, SURVEY S6).
+    Folding layers back into base files is ``LakeTable.compact_deltas``
+    (the engine runs it after every delta-append epoch).
     """
     t0 = time.time()
     if tag is not None and table.has_commit_tag(tag["source_id"], tag["batch_id"]):
         return MergeResult(None, [], 0, 0, time.time() - t0, "skipped-duplicate")
-
-    from pyspark import StorageLevel
-
-    # persist for the same reason merge_into does: the batch is consumed
-    # twice (the stats collect AND the delta-file write) — without it the
-    # whole upstream scan+parse+dedupe recomputes per use, in exactly the
-    # steady-state path MoR exists to make O(batch). DISK_ONLY: see
-    # merge_into's GC rationale.
-    bucketed_under = table.bucket_count  # the layout with_bucket uses below
-    rows = _batch_to_rows(table, deduped)
-    if batch_transform is not None:
-        rows = _apply_batch_transform(rows, batch_transform)
-    batch = table.with_bucket(rows).persist(StorageLevel.DISK_ONLY)
-    try:
-        stats = (
-            batch.groupBy(BUCKET_COL)
-            .agg(
-                F.sum(F.when(~F.col("_sys_deleted"), 1).otherwise(0)).alias("u"),
-                F.sum(F.when(F.col("_sys_deleted"), 1).otherwise(0)).alias("d"),
-            )
-            .collect()
-        )
-        n_upserts = sum(int(r["u"] or 0) for r in stats)
-        n_deletes = sum(int(r["d"] or 0) for r in stats)
-        touched = sorted(r[BUCKET_COL] for r in stats)
-        if not touched:
-            return MergeResult(None, [], 0, 0, time.time() - t0, "noop")
-        snap = table.append_deltas(
-            batch,
-            tag=tag,
-            summary={"upserts": n_upserts, "deletes": n_deletes},
-            bucketed_under=bucketed_under,
-            touched_buckets=touched,
-        )
-    finally:
-        batch.unpersist()
-    if compact_max_delta_files is not None:
-        try:
-            table.compact_deltas(max_delta_files=compact_max_delta_files)
-        except (ConcurrentModification, CommitConflict):
-            # fold-back is maintenance, not the epoch: the delta commit
-            # above already landed, so a racing writer here must not fail
-            # the apply — layers fold on the next quiet pass
-            pass
-    return MergeResult(
-        snap, touched, n_upserts, n_deletes, time.time() - t0, "delta-append"
-    )
+    with _prepared_batch(table, deduped, batch_transform) as b:
+        snap = _append_deltas(table, b, tag) if b.touched else None
+    strategy = "delta-append" if b.touched else "noop"
+    return MergeResult(snap, b.touched, b.upserts, b.deletes, time.time() - t0, strategy)

@@ -37,8 +37,10 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from nvimagecodec_spark.lakehouse.incremental import (
+    base_field_ids,
     last_synced_batch_id,
     pending_changes,
+    resolve_columns,
 )
 from nvimagecodec_spark.operators.lww import KEY_COLS, ORDER_COLS, _ord_struct
 
@@ -234,6 +236,7 @@ class Scd2View:
             properties={
                 "scd2.track-cols": ",".join(track_cols),
                 "scd2.base-key-cols": ",".join(base.key_cols),
+                **base_field_ids(base, track_cols),
             },
         )
         return cls(spark, path)
@@ -252,8 +255,12 @@ class Scd2View:
         if pending is None:
             return MergeResult(None, [], 0, 0, 0.0, "noop")
         to_id, ch = pending
+        # track columns keep their create-time names in the view; in `ch`
+        # they carry their names at to_id
+        at = resolve_columns(base, self.table, self.track_cols, to_id)
+        track = list(zip(self.track_cols, at))
         changed = F.lit(False)
-        for c in self.track_cols:
+        for _, c in track:
             changed = changed | ~F.col(c).eqNullSafe(F.col(f"before_{c}"))
         keep = (
             (F.col("op") == "I")
@@ -263,9 +270,7 @@ class Scd2View:
         kind = F.when(F.col("op") == "D", self._KIND_DELETE).otherwise(
             self._KIND_VERSION
         )
-        tracked = [
-            F.when(F.col("op") != "D", F.col(c)).alias(c) for c in self.track_cols
-        ]
+        tracked = [F.when(F.col("op") != "D", F.col(c)).alias(name) for name, c in track]
         rows = ch.where(keep).select(*self.base_key_cols, kind.alias("kind"), *tracked)
         return merge_into(
             self.table,

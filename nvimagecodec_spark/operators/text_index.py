@@ -31,8 +31,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from nvimagecodec_spark.lakehouse.incremental import (
+    base_field_ids,
     last_synced_batch_id,
     pending_changes,
+    resolve_columns,
 )
 from nvimagecodec_spark.lakehouse.table import LakeTable
 from nvimagecodec_spark.operators.merge import MergeResult, merge_into
@@ -84,6 +86,7 @@ class IncrementalTextIndex:
             properties={
                 "index.text-col": text_col,
                 "index.base-keys": ",".join(base.key_cols),
+                **base_field_ids(base, [text_col]),
             },
         )
         return cls(spark, path)
@@ -100,17 +103,18 @@ class IncrementalTextIndex:
         if pending is None:
             return MergeResult(None, [], 0, 0, 0.0, "noop")
         to_id, changes = pending
+        (text_col,) = resolve_columns(base, self.table, [self.text_col], to_id)
         return merge_into(
             self.table,
-            self._posting_batch(changes, to_id),
+            self._posting_batch(changes, text_col, to_id),
             tag={"source_id": self.SOURCE_ID, "batch_id": to_id},
         )
 
-    def _posting_batch(self, changes: DataFrame, to_id: int) -> DataFrame:
-        """Changed docs → posting change events. New image terms upsert,
-        (old ∖ new) terms delete; a D doc retracts its whole term set."""
+    def _posting_batch(self, changes: DataFrame, tcol: str, to_id: int) -> DataFrame:
+        """Changed docs → posting change events (``tcol``: the text
+        column's name in ``changes``). New image terms upsert, (old ∖ new)
+        terms delete; a D doc retracts its whole term set."""
         keys = self.base_keys
-        tcol = self.text_col
         new_terms = F.when(F.col("op") != "D", _terms(F.col(tcol))).otherwise(
             F.array().cast("array<string>")
         )

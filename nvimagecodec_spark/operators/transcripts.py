@@ -176,6 +176,7 @@ class AssembledTranscriptsView:
         turn_col: str | None = None,
         bucket_count: int | None = None,
     ) -> "AssembledTranscriptsView":
+        from nvimagecodec_spark.lakehouse.incremental import base_field_ids
         from nvimagecodec_spark.lakehouse.table import LakeTable
 
         if conv_col is None or turn_col is None:
@@ -234,6 +235,7 @@ class AssembledTranscriptsView:
                 "assembled.turn-col": turn_col,
                 "assembled.line-cols": ",".join(line_cols),
                 "assembled.sep": json.dumps(sep),
+                **base_field_ids(base, line_cols),
             },
         )
         return cls(spark, path)
@@ -252,7 +254,10 @@ class AssembledTranscriptsView:
         array patch + re-derive → one merge. Idempotent under the
         (SOURCE_ID, to_id) commit tag; safe to replay.
         """
-        from nvimagecodec_spark.lakehouse.incremental import pending_changes
+        from nvimagecodec_spark.lakehouse.incremental import (
+            pending_changes,
+            resolve_columns,
+        )
         from nvimagecodec_spark.operators.merge import MergeResult, merge_into
 
         pending = pending_changes(self.table, self.SOURCE_ID, base, to_id)
@@ -260,7 +265,10 @@ class AssembledTranscriptsView:
             return MergeResult(None, [], 0, 0, 0.0, "noop")
         to_id, changes = pending
         batch, cached = self._patched_batch(
-            changes, self._resolve_line_cols(base), to_id, persist_patches
+            changes,
+            resolve_columns(base, self.table, self.line_cols, to_id),
+            to_id,
+            persist_patches,
         )
         try:
             return merge_into(
@@ -271,31 +279,6 @@ class AssembledTranscriptsView:
         finally:
             if cached is not None:
                 cached.unpersist()
-
-    def _resolve_line_cols(self, base) -> list[str]:
-        """Stored line-col names mapped through base schema evolution: a
-        column renamed since the view was created is found via its
-        ``prev_names`` history (field-id stable), so syncs keep working
-        across renames; a DROPPED line column raises rather than silently
-        rendering a hole in every future line."""
-        live = {c.name for c in base.table_schema.live_columns}
-        by_prev = {}
-        for c in base.table_schema.live_columns:
-            for p in c.prev_names:
-                by_prev.setdefault(p, c.name)
-        out = []
-        for name in self.line_cols:
-            if name in live:
-                out.append(name)
-            elif name in by_prev:
-                out.append(by_prev[name])
-            else:
-                raise ValueError(
-                    f"line column {name!r} no longer exists in the base "
-                    "table (dropped?) — recreate the view with current "
-                    "line columns"
-                )
-        return out
 
     def _patched_batch(
         self,

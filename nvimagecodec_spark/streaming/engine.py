@@ -549,19 +549,10 @@ class CdcEngine:
         the caller owns its lifecycle (``handle.stop()``); without one
         this blocks until the backlog drains and returns the epoch count.
         """
-        raw = (
-            self.spark.readStream.format("text")
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .load(source_dir)
-        )
-
-        def events_of(batch_df: DataFrame) -> DataFrame:
-            # keep_dead: dead letters ride the same single scan and are
-            # split off + sunk inside apply_epoch
-            return parse_changes(with_lineage(batch_df), keep_dead=True)
-
-        return self._drive_stream(
-            raw, events_of, max_epochs, await_seconds, trigger_interval
+        return drive_stream(
+            text_tail(self.spark, source_dir, max_files_per_trigger),
+            lambda df, batch_id: self.apply_epoch(tail_events(df), batch_id),
+            self.checkpoint_dir, max_epochs, await_seconds, trigger_interval,
         )
 
     def run_stream_ocf(
@@ -597,54 +588,11 @@ class CdcEngine:
             .option("maxFilesPerTrigger", max_files_per_trigger)
             .load(source_dir)
         )
-
-        def events_of(batch_df: DataFrame) -> DataFrame:
-            return ocf_changes(parse_ocf_files(batch_df))
-
-        return self._drive_stream(
-            raw, events_of, max_epochs, await_seconds, trigger_interval
+        return drive_stream(
+            raw,
+            lambda df, batch_id: self.apply_epoch(ocf_changes(parse_ocf_files(df)), batch_id),
+            self.checkpoint_dir, max_epochs, await_seconds, trigger_interval,
         )
-
-    def _drive_stream(
-        self,
-        raw: DataFrame,
-        events_of,
-        max_epochs: int | None,
-        await_seconds: float | None,
-        trigger_interval: str | None,
-    ):
-        applied = {"n": 0}
-
-        def epoch_fn(batch_df: DataFrame, batch_id: int):
-            self.apply_epoch(events_of(batch_df), batch_id)
-            applied["n"] += 1
-
-        writer = raw.writeStream.foreachBatch(epoch_fn).option(
-            "checkpointLocation", self.checkpoint_dir
-        )
-        if trigger_interval:
-            return writer.trigger(processingTime=trigger_interval).start()
-        q = writer.trigger(availableNow=True).start()
-        try:
-            if max_epochs is None:
-                q.awaitTermination(await_seconds)
-            else:
-                # best-effort epoch bound (review-caught: the parameter
-                # was accepted and silently ignored): poll and stop once
-                # the limit is reached — epochs already applied stay
-                # exactly-once; an epoch that slipped in while stopping
-                # is still correct, just beyond the soft cap.
-                deadline = (
-                    time.time() + await_seconds if await_seconds else None
-                )
-                while q.isActive and applied["n"] < max_epochs:
-                    if deadline and time.time() > deadline:
-                        break
-                    q.awaitTermination(0.2)
-        finally:
-            if q.isActive:
-                q.stop()
-        return applied["n"]
 
     # ------------------------------------------------------ incremental loop
     def run_incremental(self, stream: ChangeStream, max_epochs: int = 1000) -> int:
@@ -737,3 +685,64 @@ class CdcEngine:
             "wall_sec": round(secs, 3),
             "events_per_sec": round(total / secs, 1) if secs else None,
         }
+
+
+# ------------------------------------------------------ the one stream driver
+def text_tail(spark: SparkSession, source_dir: str, max_files_per_trigger: int) -> DataFrame:
+    """Streaming text scan of a directory of change-event files."""
+    reader = spark.readStream.format("text")
+    return reader.option("maxFilesPerTrigger", max_files_per_trigger).load(source_dir)
+
+
+def tail_events(batch_df: DataFrame) -> DataFrame:
+    """One micro-batch of ``text_tail`` lines → parsed change events.
+    keep_dead: dead letters ride the same single scan and are split off +
+    sunk inside ``apply_epoch``."""
+    return parse_changes(with_lineage(batch_df), keep_dead=True)
+
+
+def drive_stream(
+    raw: DataFrame,
+    apply,
+    checkpoint_dir: str,
+    max_epochs: int | None = None,
+    await_seconds: float | None = None,
+    trigger_interval: str | None = None,
+):
+    """Run ``apply(batch_df, batch_id)`` on every micro-batch of the
+    streaming frame ``raw``, checkpointed under ``checkpoint_dir``.
+
+    With ``trigger_interval`` the query runs on a processing-time trigger
+    and its handle is returned still running. Otherwise it drains the
+    backlog (availableNow), stops, and returns how many epochs ran;
+    ``max_epochs`` / ``await_seconds`` cut the drain short."""
+    applied = {"n": 0}
+
+    def epoch_fn(batch_df: DataFrame, batch_id: int):
+        apply(batch_df, batch_id)
+        applied["n"] += 1
+
+    writer = raw.writeStream.foreachBatch(epoch_fn).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if trigger_interval:
+        return writer.trigger(processingTime=trigger_interval).start()
+    q = writer.trigger(availableNow=True).start()
+    try:
+        if max_epochs is None:
+            q.awaitTermination(await_seconds)
+        else:
+            # best-effort epoch bound (review-caught: the parameter
+            # was accepted and silently ignored): poll and stop once
+            # the limit is reached — epochs already applied stay
+            # exactly-once; an epoch that slipped in while stopping
+            # is still correct, just beyond the soft cap.
+            deadline = time.time() + await_seconds if await_seconds else None
+            while q.isActive and applied["n"] < max_epochs:
+                if deadline and time.time() > deadline:
+                    break
+                q.awaitTermination(0.2)
+    finally:
+        if q.isActive:
+            q.stop()
+    return applied["n"]

@@ -2,15 +2,16 @@
 
 The wire reality of CDC is one stream carrying many tables' events (a
 Debezium connector emits every table of a database; a transcript stream
-carries several event families). ``CdcRouter`` splits ONE parsed scan
-across N routes — each a (table, predicate) pair backed by its own
+carries several event families). ``CdcRouter`` splits ONE streaming
+epoch across N routes — each a (table, predicate) pair backed by its own
 ``CdcEngine`` — inside the same streaming epoch:
 
-- **Parse once.** The text scan + format probing (the expensive part)
-  runs once per epoch; each route applies a column predicate over the
-  parsed envelope. At 100 TB the alternative — one streaming query per
-  table re-reading the same files — multiplies ingest I/O by the table
-  count.
+- **One query.** All routes share one streaming query, one file listing
+  and one checkpoint; each route's engine gets the epoch's LAZY parsed
+  frame filtered by its predicate. The parse is NOT shared: each
+  engine's stats job and merge batch re-scan and re-parse the epoch's
+  files (``CdcEngine.apply_epoch`` measured caching the wide event rows
+  as slower than re-parsing), so parse cost grows with the route count.
 - **Per-table exactly-once.** Each route's engine tags its commits with
   ``{source_id}.{route}`` + the shared streaming batch id. A crash
   between table applies heals on replay: already-committed routes skip
@@ -42,8 +43,12 @@ from pyspark.sql import functions as F
 from nvimagecodec_spark.config import EngineConfig
 from nvimagecodec_spark.lakehouse.table import LakeTable
 from nvimagecodec_spark.operators.merge import MergeResult
-from nvimagecodec_spark.sources.changelog import parse_changes, with_lineage
-from nvimagecodec_spark.streaming.engine import CdcEngine
+from nvimagecodec_spark.streaming.engine import (
+    CdcEngine,
+    drive_stream,
+    tail_events,
+    text_tail,
+)
 
 
 class CdcRouter:
@@ -84,36 +89,37 @@ class CdcRouter:
             first_table.path, "_router_checkpoints"
         )
 
-    def _pred_col(self, name: str, events: DataFrame) -> Column:
-        p = self._preds[name]
-        return p(events) if callable(p) else p
-
-    def apply_epoch(self, events: DataFrame, batch_id: int) -> dict[str, MergeResult]:
-        """Fan one parsed epoch out to every route. Idempotent per
-        (route, batch_id) — replays skip routes that already committed."""
+    def _routed(self, events: DataFrame, batch_id: int) -> list[tuple[str, DataFrame]]:
+        """One epoch split into each route's events. Dead rows ride with
+        the primary route: exactly one dead-letter sink accounts them.
+        With ``unmatched="error"``, a usable row no route matches raises
+        here, before any route applies or stages anything."""
         usable = F.col("src_format").isNotNull() & F.col("op").isNotNull()
+        preds = [
+            F.coalesce(p(events) if callable(p) else p, F.lit(False))
+            for p in self._preds.values()  # route_names order
+        ]
         if self.unmatched == "error":
             any_match = F.lit(False)
-            for name in self.route_names:
-                any_match = any_match | F.coalesce(
-                    self._pred_col(name, events), F.lit(False)
-                )
+            for p in preds:
+                any_match = any_match | p
             n_unmatched = events.where(usable & ~any_match).count()
             if n_unmatched:
                 raise ValueError(
                     f"{n_unmatched} events matched no route in epoch {batch_id}"
                 )
-        results: dict[str, MergeResult] = {}
-        for i, name in enumerate(self.route_names):
-            pred = F.coalesce(self._pred_col(name, events), F.lit(False))
-            if i == 0:
-                # dead rows ride with the primary route: exactly one
-                # dead-letter sink accounts them
-                pred = pred | ~usable
-            results[name] = self.engines[name].apply_epoch(
-                events.where(pred), batch_id
-            )
-        return results
+        preds[0] = preds[0] | ~usable
+        return [
+            (name, events.where(p)) for name, p in zip(self.route_names, preds)
+        ]
+
+    def apply_epoch(self, events: DataFrame, batch_id: int) -> dict[str, MergeResult]:
+        """Fan one parsed epoch out to every route. Idempotent per
+        (route, batch_id) — replays skip routes that already committed."""
+        return {
+            name: self.engines[name].apply_epoch(route_events, batch_id)
+            for name, route_events in self._routed(events, batch_id)
+        }
 
     def apply_epoch_atomic(self, events: DataFrame, batch_id: int, catalog):
         """All-or-nothing fan-out: every route's epoch is STAGED (full
@@ -130,26 +136,12 @@ class CdcRouter:
         and a crash anywhere re-resolves via the catalog's intent log
         (rolled forward once any route published, rolled back otherwise).
         """
-        usable = F.col("src_format").isNotNull() & F.col("op").isNotNull()
-        if self.unmatched == "error":
-            any_match = F.lit(False)
-            for name in self.route_names:
-                any_match = any_match | F.coalesce(
-                    self._pred_col(name, events), F.lit(False)
-                )
-            n_unmatched = events.where(usable & ~any_match).count()
-            if n_unmatched:
-                raise ValueError(
-                    f"{n_unmatched} events matched no route in epoch {batch_id}"
-                )
+        routed = self._routed(events, batch_id)
         txn = catalog.begin(self.source_id, batch_id)
         try:
-            for i, name in enumerate(self.route_names):
-                pred = F.coalesce(self._pred_col(name, events), F.lit(False))
-                if i == 0:
-                    pred = pred | ~usable
+            for name, route_events in routed:
                 res = self.engines[name].apply_epoch(
-                    events.where(pred), batch_id, staged=True
+                    route_events, batch_id, staged=True
                 )
                 if res.strategy == "skipped-duplicate":
                     # this route's tag already committed (crash replay) —
@@ -174,37 +166,24 @@ class CdcRouter:
         await_seconds: float | None = None,
         catalog=None,
     ) -> int:
-        """Structured Streaming tail over ``source_dir``, one PARSE per
-        epoch fanned out to every route (availableNow: drain + stop).
+        """Structured Streaming tail over ``source_dir``, one streaming
+        query fanned out to every route (availableNow: drain + stop).
         With ``catalog`` (a TxnCatalog), epochs land atomically across
         all routes via ``apply_epoch_atomic``."""
-        raw = (
-            self.spark.readStream.format("text")
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .load(source_dir)
-        )
-        applied = {"n": 0}
 
-        def epoch_fn(batch_df: DataFrame, batch_id: int):
-            events = parse_changes(with_lineage(batch_df), keep_dead=True)
+        def apply(batch_df: DataFrame, batch_id: int):
+            events = tail_events(batch_df)
             if catalog is not None:
                 self.apply_epoch_atomic(events, batch_id, catalog)
             else:
                 self.apply_epoch(events, batch_id)
-            applied["n"] += 1
 
-        q = (
-            raw.writeStream.foreachBatch(epoch_fn)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
+        return drive_stream(
+            text_tail(self.spark, source_dir, max_files_per_trigger),
+            apply,
+            self.checkpoint_dir,
+            await_seconds=await_seconds,
         )
-        try:
-            q.awaitTermination(await_seconds)
-        finally:
-            if q.isActive:
-                q.stop()
-        return applied["n"]
 
     def lineage(self) -> dict[str, list[dict]]:
         return {name: eng.lineage() for name, eng in self.engines.items()}

@@ -17,6 +17,9 @@ def spark():
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", "4g")
         .config("spark.ui.enabled", "false")
+        # PySpark's call-site capture costs several py4j round trips per
+        # Column function and only enriches error messages.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )
     yield s

@@ -121,3 +121,34 @@ def test_router_unmatched_error(spark, tmp_dir):
 def test_router_validates_args(spark, tmp_dir):
     with pytest.raises(ValueError, match="at least one route"):
         CdcRouter(spark, routes={}, source_id="x")
+
+
+def test_router_atomic_unmatched_error_stages_nothing(spark, tmp_dir):
+    """The unmatched check runs before the transaction begins: no route
+    stages anything and the catalog pointer does not move."""
+    import copy
+
+    from nvimagecodec_spark.lakehouse.txn import TxnCatalog
+
+    events, stream_dir, te, to = _mk(spark, tmp_dir, n_events=300, files=1)
+    catalog = TxnCatalog.create(
+        spark, os.path.join(tmp_dir, "cat"), {"even": te, "odd": to}
+    )
+    state0 = copy.deepcopy(catalog.state)
+    never = F.col("turn_idx") < 0
+    router = CdcRouter(
+        spark,
+        routes={"even": (te, never), "odd": (to, never)},
+        source_id="rt",
+        unmatched="error",
+    )
+    ch = ChangeStream(spark, stream_dir).events()
+    with pytest.raises(ValueError, match="matched no route"):
+        router.apply_epoch_atomic(ch, 0, catalog)
+    for t in (te, to):
+        t.refresh()
+        assert t.staged() == []
+    catalog.refresh()
+    assert catalog.state == state0
+    assert catalog.pinned_snapshot("even") == te.current_snapshot().snapshot_id
+    assert catalog.pinned_snapshot("odd") == to.current_snapshot().snapshot_id
