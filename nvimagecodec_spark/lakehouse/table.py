@@ -182,6 +182,10 @@ class _LazyFiles:
             self._by_bucket[entry["bucket"]] = got
         return got
 
+    def loaded(self, bucket: int) -> list[dict] | None:
+        """The bucket's file entries if they were already parsed, else None."""
+        return self._by_bucket.get(bucket)
+
     def for_buckets(self, bset: set[int]) -> list[dict]:
         return [
             f
@@ -652,6 +656,7 @@ class LakeTable:
         summary: dict,
         tag: dict | None,
         schema_version: int,
+        parent: Snapshot | None = None,
     ) -> dict:
         """A metadata.json snapshot entry. Its file list goes to manifests
         (``manifest_list``) and never enters metadata.json."""
@@ -663,42 +668,60 @@ class LakeTable:
             "summary": summary,
             "tag": tag,
             "schema_version": schema_version,
-            "manifest_list": self._write_manifests(snapshot_id, files),
+            "manifest_list": self._write_manifests(snapshot_id, files, parent),
         }
 
-    def _write_immutable(self, path: str, payload) -> None:
+    def _write_immutable(self, path: str, text: str) -> None:
         if os.path.exists(path):
             return
         tmp = path + f".tmp.{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as f:
-            json.dump(payload, f, default=str)
+            f.write(text)
             f.flush()
             os.fsync(f.fileno())
         os.replace(tmp, path)
 
-    def _write_manifests(self, snapshot_id: int, files: list[dict]) -> str:
+    def _write_manifests(
+        self, snapshot_id: int, files: list[dict], parent: Snapshot | None
+    ) -> str:
         """Persist `files` as per-bucket content-addressed manifests + one
         manifest-list; return the manifest-list NAME (paths inside
         manifests/MLs are stored relative — to the table root and the
         manifest dir respectively — keeping entries small and the table
-        relocatable). Unchanged buckets reuse their existing manifest file
-        byte-for-byte (no write). The manifest cache is primed with what
-        was written, so reading the new snapshot back parses nothing."""
+        relocatable). A bucket whose file list is the one ``parent``
+        already loaded (a commit carrying the bucket over) reuses the
+        parent's manifest-list entry without serializing it, so a commit
+        serializes only the buckets it changed; other unchanged buckets
+        hash to their existing manifest file and skip the write. The
+        manifest cache is primed with what was written, so reading the
+        new snapshot back parses nothing."""
         import hashlib
 
         os.makedirs(self._manifest_dir, exist_ok=True)
         by_bucket: dict[int, list[dict]] = {}
         for f in files:
-            rel = {**f, "path": os.path.relpath(f["path"], self.path)}
-            by_bucket.setdefault(f["bucket"], []).append(rel)
+            by_bucket.setdefault(f["bucket"], []).append(f)
+        parent_entries = (
+            {e["bucket"]: e for e in parent.files.entries} if parent else {}
+        )
         entries = []
         for b in sorted(by_bucket):
-            flist = sorted(by_bucket[b], key=lambda f: f["path"])
+            prev = parent_entries.get(b)
+            if prev is not None and by_bucket[b] == parent.files.loaded(b):
+                entries.append(prev)
+                continue
+            flist = sorted(
+                (
+                    {**f, "path": os.path.relpath(f["path"], self.path)}
+                    for f in by_bucket[b]
+                ),
+                key=lambda f: f["path"],
+            )
             content = json.dumps(flist, sort_keys=True, default=str)
             h = hashlib.sha1(content.encode()).hexdigest()[:16]
             mname = f"m-{h}.json"
             mpath = os.path.join(self._manifest_dir, mname)
-            self._write_immutable(mpath, flist)
+            self._write_immutable(mpath, content)
             if mpath not in self._manifest_cache:
                 # as a reader loads it (default=str stringifies, tuples
                 # become lists)
@@ -706,7 +729,7 @@ class LakeTable:
             entries.append({"bucket": b, "manifest": mname, "n_files": len(flist)})
         ml_name = f"ml-{snapshot_id:08d}-{uuid.uuid4().hex[:8]}.json"
         ml_path = os.path.join(self._manifest_dir, ml_name)
-        self._write_immutable(ml_path, entries)
+        self._write_immutable(ml_path, json.dumps(entries))
         self._manifest_cache[ml_path] = entries
         return ml_name
 
@@ -1179,6 +1202,9 @@ class LakeTable:
         # per-file [min,max] is recorded in the manifest alongside the key
         # ranges — the Iceberg column-stats tier that lets
         # read(range_filters=) skip files by predicate before any I/O.
+        # Parquet statistics follow these pruning columns: only the key,
+        # stat-cols and z-order columns carry footer min/max (and with it
+        # a column-index entry), because no reader prunes by any other.
         # "write.max-records-per-file" caps file size so a bucket splits
         # into several stat-disjoint files (default 5M rows).
         props = self.meta.get("properties", {})
@@ -1204,9 +1230,15 @@ class LakeTable:
         self.spark.conf.set(
             "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
         )
+        no_stats = {
+            f"parquet.column.statistics.enabled#{c}": "false"
+            for c in phys.columns
+            if c not in key_phys and c not in stat_phys
+        }
         (
             staged.write.partitionBy(_PART_DIR_COL)
             .option("maxRecordsPerFile", max_rows_per_file)
+            .options(**no_stats)
             .parquet(out_dir, compression=codec)
         )
         import pyarrow.parquet as pq
@@ -1301,7 +1333,7 @@ class LakeTable:
             meta["snapshots"] = meta["snapshots"] + [
                 self._snapshot_entry(
                     new_id, head.snapshot_id, operation, snap_files, summary,
-                    tag, meta["current_schema_version"],
+                    tag, meta["current_schema_version"], parent=head,
                 )
             ]
             self._advance_head(meta, new_id)
@@ -1388,7 +1420,7 @@ class LakeTable:
         extra = sorted({f["bucket"] for f in new_files} - bset)
         if extra:
             raise ValueError(f"merge wrote to undeclared buckets {extra}")
-        s = {"touched_buckets": sorted(bset), "new_files": len(new_files)}
+        s = {"touched_bucket_count": len(bset), "new_files": len(new_files)}
         s.update(summary or {})
         # what the merge read for the touched buckets — the validation base
         if assumed_files is not None:

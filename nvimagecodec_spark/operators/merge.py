@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nvimagecodec_spark.lakehouse.schema import ColumnDef
 from nvimagecodec_spark.lakehouse.table import (
     BUCKET_COL,
     SYSTEM_COLS,
@@ -76,22 +77,41 @@ class MergeResult:
 _PX_COL = "_px"  # materialized parsed-payload struct column
 
 
+def payload_field_names(table: LakeTable) -> list[tuple[ColumnDef, list[str]]]:
+    """(live non-key column, the JSON field names it reads) — its current
+    name, then its previous names; no name appears twice. Live columns
+    only: a dropped column stops being extracted. A live column's current
+    name claims that JSON field: a previous name that collides with one
+    (rename "text" → "body", then add "text") is skipped, so "text" fills
+    the new column only. A previous name two columns share goes to the
+    first."""
+    live = table.table_schema.live_columns
+    claimed = {c.name for c in live}
+    out = []
+    for c in live:
+        if c.name in table.key_cols:
+            continue
+        names = [c.name]
+        for p in c.prev_names:
+            if p not in claimed:
+                claimed.add(p)
+                names.append(p)
+        out.append((c, names))
+    return out
+
+
 def payload_struct_expr(table: LakeTable, raw_col: str) -> F.Column:
     """ONE ``from_json`` of the raw after-image under the CURRENT (evolved)
-    schema, including historical names of renamed columns. Materialize this
-    as its own projection column (``_PX_COL``) and extract fields from it —
+    schema, including historical names of renamed columns
+    (``payload_field_names``). Materialize this as its own projection
+    column (``_PX_COL``) and extract fields from it —
     referencing a from_json from N output columns re-parses the JSON N
     times (measured 20x slowdown on wide extracts)."""
-    key_cols = table.key_cols
-    fields: list[T.StructField] = []
-    # live columns only: a dropped column stops being extracted, and a
-    # dropped + re-added pair must not put duplicate field names into the
-    # from_json struct
-    for c in table.table_schema.live_columns:
-        if c.name in key_cols:
-            continue
-        for v in [c.name] + [p for p in c.prev_names if p != c.name]:
-            fields.append(T.StructField(v, c.logical_type(), True))
+    fields = [
+        T.StructField(v, c.logical_type(), True)
+        for c, names in payload_field_names(table)
+        for v in names
+    ]
     return F.from_json(F.col(raw_col), T.StructType(fields))
 
 
@@ -104,13 +124,9 @@ def payload_extract_exprs(
     schema evolution but absent in old payloads null-fill (out-of-bounds
     constant fill analog,
     /root/reference/src/imgproc/out_of_bound_roi_fill.cpp:26-46)."""
-    key_cols = table.key_cols
     j = F.col(struct_col)
     exprs = []
-    for c in table.table_schema.live_columns:
-        if c.name in key_cols:
-            continue
-        variants = [c.name] + [p for p in c.prev_names if p != c.name]
+    for c, variants in payload_field_names(table):
         e = F.coalesce(*[j[v] for v in variants]) if len(variants) > 1 else j[variants[0]]
         if keep_typed is not None:  # these rows keep their current typed value
             e = F.when(keep_typed, F.col(c.name)).otherwise(e)
@@ -129,10 +145,9 @@ def stored_image_expr(table: LakeTable) -> F.Column:
     reads the typed values from the materialized ``_PX_COL`` struct."""
     j = F.col(_PX_COL)
     typed_ok: dict[str, F.Column] = {k: F.lit(True) for k in table.key_cols}
-    for c in table.table_schema.live_columns:
-        if c.name not in table.key_cols:
-            for v in [c.name] + c.prev_names:
-                typed_ok.setdefault(v, j[v].isNotNull())
+    for _, names in payload_field_names(table):
+        for v in names:
+            typed_ok[v] = j[v].isNotNull()
     ok = F.create_map(*[x for k, v in typed_ok.items() for x in (F.lit(k), v)])
     fields = F.from_json(F.col("after"), T.MapType(T.StringType(), T.StringType()))
 

@@ -48,7 +48,7 @@ from pyspark.sql import types as T
 
 from nvimagecodec_spark.lakehouse.table import LakeTable
 from nvimagecodec_spark.operators.lww import ORDER_COLS, _ord_struct
-from nvimagecodec_spark.operators.merge import payload_struct_expr
+from nvimagecodec_spark.operators.merge import payload_field_names, payload_struct_expr
 
 _META = ["lsn", "commit_ts", "src_file", "src_offset"]
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"  # matches the wire format parsers emit
@@ -56,14 +56,11 @@ _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"  # matches the wire format parsers emit
 
 def _field_specs(table: LakeTable) -> list[tuple[str, list[str], T.DataType]]:
     """(logical name, json name variants incl. pre-rename, type) per live
-    non-key column — same variant rule as payload_extract_exprs."""
-    specs = []
-    for c in table.table_schema.live_columns:
-        if c.name in table.key_cols:
-            continue
-        variants = [c.name] + [p for p in c.prev_names if p != c.name]
-        specs.append((c.name, variants, c.logical_type()))
-    return specs
+    non-key column — the variants ``payload_field_names`` assigns."""
+    return [
+        (c.name, variants, c.logical_type())
+        for c, variants in payload_field_names(table)
+    ]
 
 
 def _value_expr(variants: list[str]) -> F.Column:

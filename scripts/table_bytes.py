@@ -5,10 +5,14 @@
 
 For each snapshot (or only ``--snapshot``) it sums, over the snapshot's
 live data files, every column chunk's compressed and uncompressed bytes
-from the parquet footers, plus the rest of each file (footer, page
-indexes, magic) as ``footer+index``. Reads table metadata and parquet
-footers only: no SparkSession, no data pages. Files that snapshot expiry
-already deleted are counted under ``missing_files`` and skipped.
+from the parquet footers, plus two rows for the rest of each file:
+``footer`` (the serialized FileMetaData) and ``page-index`` (what lies
+between the last column chunk and the footer: column and offset indexes,
+and parquet bloom filters if a writer added any). The 12 framing bytes of
+every file (magic and footer length) are in neither row. Reads table
+metadata and parquet footers only: no SparkSession, no data pages. Files
+that snapshot expiry already deleted are counted under ``missing_files``
+and skipped.
 """
 
 from __future__ import annotations
@@ -25,12 +29,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from nvimagecodec_spark.lakehouse.table import LakeTable  # noqa: E402
 
 
+_FRAMING = 12  # leading "PAR1", footer length, trailing "PAR1"
+
+
 def snapshot_bytes(table: LakeTable, snapshot_id: int) -> dict:
     snap = table.snapshot(snapshot_id)
     cols: dict[str, list[int]] = {}
     out = {"snapshot_id": snapshot_id, "operation": snap.operation, "files": 0,
            "missing_files": 0, "rows": 0, "bytes": 0, "columns": cols}
-    overhead = 0
+    footer = page_index = 0
     for f in snap.files:
         if not os.path.exists(f["path"]):
             out["missing_files"] += 1
@@ -48,8 +55,10 @@ def snapshot_bytes(table: LakeTable, snapshot_id: int) -> dict:
                 acc[0] += c.total_compressed_size
                 acc[1] += c.total_uncompressed_size
                 chunks += c.total_compressed_size
-        overhead += size - chunks
-    cols["footer+index"] = [overhead, overhead]
+        footer += md.serialized_size
+        page_index += size - chunks - md.serialized_size - _FRAMING
+    cols["footer"] = [footer, footer]
+    cols["page-index"] = [page_index, page_index]
     return out
 
 

@@ -9,12 +9,15 @@ the Spark-integrated paths are covered by the existing lakehouse /
 maintenance / concurrency tests which all go through the same code.
 """
 
+import hashlib
 import json
 import os
+import types
 
 import pytest
 from pyspark.sql import types as T
 
+from nvimagecodec_spark.lakehouse import table as table_mod
 from nvimagecodec_spark.lakehouse.table import LakeTable
 
 SCHEMA = T.StructType(
@@ -44,7 +47,7 @@ def _merge_epoch(table, epoch, touched):
     def files_fn(snap):
         return [f for f in snap.files if f["bucket"] not in tset] + new_files
 
-    return table._commit("merge", files_fn, {"touched_buckets": sorted(touched)})
+    return table._commit("merge", files_fn, {"touched_bucket_count": len(tset)})
 
 
 def _tree_bytes(d):
@@ -118,6 +121,56 @@ def test_manifest_reuse_is_content_addressed(spark, tmp_path):
     for b in range(8):
         if b != 3:
             assert ml1[b] == ml2[b], f"untouched bucket {b} manifest was rewritten"
+
+
+def _full_manifest_list(table, files):
+    """The manifest list built by serializing and hashing every bucket's
+    sorted, table-relative file list — what a commit wrote before it
+    reused the parent's entries for unchanged buckets."""
+    by_bucket = {}
+    for f in files:
+        rel = {**f, "path": os.path.relpath(f["path"], table.path)}
+        by_bucket.setdefault(f["bucket"], []).append(rel)
+    out = []
+    for b in sorted(by_bucket):
+        flist = sorted(by_bucket[b], key=lambda f: f["path"])
+        content = json.dumps(flist, sort_keys=True, default=str)
+        h = hashlib.sha1(content.encode()).hexdigest()[:16]
+        out.append({"bucket": b, "manifest": f"m-{h}.json", "n_files": len(flist)})
+    return out
+
+
+def test_commit_serializes_only_changed_buckets(tmp_path, monkeypatch):
+    """A 3-bucket commit on a 2,048-bucket table serializes 3 manifests
+    and 1 manifest list; the other buckets reuse the parent's entries,
+    and the manifest list equals the fully re-serialized one."""
+    n = 2048
+    t = LakeTable.create(None, str(tmp_path / "t"), SCHEMA, ["conv_id", "turn_idx"], n)
+    _merge_epoch(t, 0, list(range(n)))
+    touched = [5, 700, n - 1]
+
+    dumped = []
+
+    def counted(fn):
+        def dump(obj, *a, **kw):
+            dumped.append(obj)
+            return fn(obj, *a, **kw)
+
+        return dump
+
+    monkeypatch.setattr(table_mod, "json", types.SimpleNamespace(
+        load=json.load, loads=json.loads,
+        dump=counted(json.dump), dumps=counted(json.dumps),
+    ))
+    snap = _merge_epoch(t, 1, touched)
+    monkeypatch.undo()
+    assert len(dumped) <= len(touched) + 1, f"{len(dumped)} serializations"
+
+    expected_files = [_fake_file(t, b, 1 if b in touched else 0) for b in range(n)]
+    with open(os.path.join(t._manifest_dir, snap.manifest_list)) as f:
+        assert json.load(f) == _full_manifest_list(t, expected_files)
+    reread = LakeTable.load(None, t.path).current_snapshot().files
+    assert sorted(f["path"] for f in reread) == sorted(f["path"] for f in expected_files)
 
 
 def test_expire_reaps_orphaned_manifests(spark, tmp_path):

@@ -5,7 +5,8 @@ Pins the write-side predicate (lossless → NULL; unknown field, type
 mismatch, overflow, malformed JSON → ``after`` verbatim), re-extraction
 over a mixed table, the drop → rewrite → re-add → re-extract lifecycle
 (dropped values ride through the rewrite in the image ``LakeTable.read``
-rebuilds), and the engine skipping the schema-event job on epochs
+rebuilds), which column a re-added old name's JSON field fills after a
+rename, and the engine skipping the schema-event job on epochs
 without S-events.
 """
 
@@ -142,6 +143,35 @@ def test_drop_rewrite_readd_reextract_restores_values(spark, tmp_dir):
     for _, t, _, a in before:
         assert (got[("a", t)]["role"], got[("a", t)]["n"]) == (a["role"], a["n"])
     assert (got[("b", 1)]["role"], got[("b", 1)]["n"]) == (None, 100)
+
+
+def test_readd_after_rename_claims_the_old_field_name(spark, tmp_dir):
+    """rename role → speaker, then add a new role: the JSON field "role"
+    fills the new column only, "speaker" the renamed one."""
+    table = _table(spark, tmp_dir)
+    merge_into(table, _batch(spark, [("a", 1, "I", {"role": "u", "n": 1})], 10))
+    table.rename_column("role", "speaker")
+    table.add_column("role", "string")
+    merge_into(
+        table,
+        _batch(
+            spark,
+            [
+                ("a", 2, "I", {"speaker": "s", "role": "r", "n": 2}),
+                ("a", 3, "I", {"role": "r3"}),
+                ("a", 4, "I", {"speaker": "s4"}),
+            ],
+            20,
+        ),
+    )
+    got = _stored(table)
+    assert {t: (got[("a", t)]["speaker"], got[("a", t)]["role"]) for t in (1, 2, 3, 4)} == {
+        1: ("u", None),
+        2: ("s", "r"),
+        3: (None, "r3"),
+        4: ("s4", None),
+    }
+    assert all(got[("a", t)]["_sys_raw"] is None for t in (2, 3, 4))
 
 
 def test_engine_skips_schema_job_without_s_events(spark, tmp_dir, monkeypatch):

@@ -9,6 +9,8 @@ BEFORE any I/O. Pinned here:
 - "write.max-records-per-file" splits buckets into stat-disjoint files;
 - range reads prune files (observed via DataFrame.inputFiles()) and
   return exactly the full-scan-filtered rows;
+- parquet statistics are written on the key, stat and z-order columns
+  only, and still prune lookups and range reads;
 - MoR safety: files of delta-carrying buckets are NEVER range-pruned —
   an out-of-range delta layer can hold the newer version of an in-range
   base row, and pruning it would resurrect superseded state.
@@ -152,3 +154,57 @@ def test_delta_buckets_are_never_range_pruned(spark, tmp_dir):
         for r in t.read_logical(range_filters={"val": (0, 100)}).collect()
     )
     assert got == [("c", 30)]
+
+
+def test_parquet_statistics_only_on_pruning_columns(spark, tmp_dir):
+    """Data files carry parquet min/max statistics on the key,
+    ``write.stat-cols`` and z-order columns only; the manifest ranges read
+    from them still prune lookups and range reads to the oracle rows."""
+    import pyarrow.parquet as pq
+
+    schema = T.StructType(SCHEMA.fields + [T.StructField("note", T.StringType())])
+    t = LakeTable.create(
+        spark,
+        os.path.join(tmp_dir, "lean"),
+        schema,
+        ["conv_id", "turn_idx"],
+        bucket_count=1,
+        properties={"write.stat-cols": "val", "write.max-records-per-file": "10"},
+    )
+    merge_into(t, _batch(spark, [(f"c{i:02d}", 0, "I", i, i) for i in range(40)]))
+    phys = {c.name: c.physical_name for c in t.table_schema.live_columns}
+
+    def stats_columns():
+        files = t.current_snapshot().files
+        assert len(files) == 4
+        got = set()
+        for f in files:
+            md = pq.ParquetFile(f["path"]).metadata
+            for rg in range(md.num_row_groups):
+                got.add(frozenset(
+                    md.row_group(rg).column(j).path_in_schema
+                    for j in range(md.num_columns)
+                    if md.row_group(rg).column(j).is_stats_set
+                ))
+        return got
+
+    assert stats_columns() == {frozenset(phys[c] for c in ("conv_id", "turn_idx", "val"))}
+    for f in t.current_snapshot().files:
+        assert set(f["stats"]) == {phys["conv_id"], phys["turn_idx"], phys["val"]}
+
+    hit = t.lookup(conv_id="c07", turn_idx=0)
+    assert [(r["conv_id"], r["val"]) for r in hit.collect()] == [("c07", 7)]
+    assert len(hit.inputFiles()) == 1
+    full = t.read_logical()
+    pruned = t.read_logical(range_filters={"val": (12, 17)})
+    assert sorted(r["val"] for r in pruned.collect()) == list(range(12, 18))
+    assert len(pruned.inputFiles()) < len(full.inputFiles())
+
+    t.compact(zorder_by=["ts", "val"])
+    assert stats_columns() == {
+        frozenset(phys[c] for c in ("conv_id", "turn_idx", "ts", "val"))
+    }
+    lo, hi = T0 + datetime.timedelta(hours=30), T0 + datetime.timedelta(hours=33)
+    by_ts = t.read_logical(range_filters={"ts": (lo, hi)})
+    assert sorted(r["val"] for r in by_ts.collect()) == [30, 31, 32, 33]
+    assert len(by_ts.inputFiles()) < len(t.read_logical().inputFiles())
